@@ -2,14 +2,14 @@
 driver; this file is the working instrument — guide §1).
 
 Modes:
-  --phases            phase-timed kg_pipeline (one parallelism level,
-                      mirrors bench.run_kg_pipeline stage DAG)
   --queries a,b,c     per-query timing via the noop sink (guide §1.4):
                       warm-up untimed, then best-of-N timed noop writes
   --plan name         print .explain("formatted") for a declared query
                       (after one warm-up so memoized exports exist)
 
-Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as bench.py).
+Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (same contract as bench.py;
+--cpus defaults to the host CPU count). Per-stage numbers for the KG
+pipeline come from ``perfbench/run.py --workload checkpoint --trace 1``.
 """
 
 from __future__ import annotations
@@ -23,8 +23,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-import pyspark.sql.functions as F  # noqa: E402
 
 from graphrag_spark.session import get_spark  # noqa: E402
 
@@ -41,63 +39,6 @@ def _spark(cpus: int):
     )
     spark.sparkContext.setLogLevel("ERROR")
     return spark
-
-
-def run_phases(sf_dir: str, cpus: int) -> dict:
-    """Phase-timed kg_pipeline at one parallelism level (the stage DAG of
-    pipeline.run_in_memory, forced phase by phase like
-    tools/profile_scaling.py but without amplification)."""
-    from graphrag_spark import chunking, extraction, linking, materialize, normalize
-    from graphrag_spark.corpus import spans_from_flat
-    from graphrag_spark.pipeline import document_text
-
-    spark = _spark(cpus)
-    sc = spark.sparkContext
-    times: dict[str, float] = {}
-    flat = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    docs = spans_from_flat(flat).persist()
-    docs.count()
-
-    def phase(name, fn):
-        sc.setJobDescription(f"phase:{name}")
-        t0 = time.time()
-        out = fn()
-        times[name] = round(time.time() - t0, 2)
-        sc.setJobDescription(None)
-        return out
-
-    chunks_base = chunking.with_quality(
-        chunking.chunk_documents(document_text(docs), chunking.CHUNK_SIZE, chunking.CHUNK_OVERLAP)
-    ).persist()
-    phase("chunk", lambda: chunks_base.count())
-    occ = extraction.extract_occurrences(chunks_base).persist()
-    phase("extract", lambda: occ.count())
-    mentions_raw = extraction.entities_from_occurrences(occ)
-    rels_raw = extraction.rels_from_occurrences(occ)
-    smap = phase("smap", lambda: normalize.materialize_surface_map(occ))
-    mentions_norm = normalize.normalize_mentions(mentions_raw, smap).persist()
-    phase("mentions_norm", lambda: mentions_norm.count())
-    entities = linking.link_entities(
-        linking.dedup_entities(mentions_norm), linking.alias_dictionary(spark)
-    ).persist()
-    phase("link", lambda: entities.count())
-    cmap = phase("cmap", lambda: materialize.canonical_map(entities).persist())
-    phase("cmap_force", lambda: cmap.count())
-    s2c = phase("s2c", lambda: materialize.surface_to_canonical_map(smap, cmap))
-    triples = materialize.build_triples_fused(rels_raw, s2c)
-    ntr = phase("triples", lambda: triples.count())
-    phase(
-        "sinks",
-        lambda: materialize.build_nodes(cmap)
-        .select(F.lit("n").alias("k"))
-        .unionAll(materialize.build_mentions(mentions_norm, cmap).select(F.lit("m").alias("k")))
-        .groupBy("k")
-        .count()
-        .collect(),
-    )
-    times["n_triples"] = ntr
-    times["total_phases"] = round(sum(v for k, v in times.items() if k not in ("n_triples",)), 2)
-    return times
 
 
 def run_queries(
@@ -145,17 +86,14 @@ def dump_plan(sf_dir: str, cpus: int, name: str) -> str:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--phases", action="store_true")
     ap.add_argument("--queries", type=str, default=None)
     ap.add_argument("--plan", type=str, default=None)
     ap.add_argument("--timed-runs", type=int, default=2)
     ap.add_argument("--noop", action="store_true")
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1)))
     args = ap.parse_args()
-    if args.phases:
-        print(json.dumps(run_phases(args.sf_dir, args.cpus)))
-    elif args.queries:
+    if args.queries:
         print(json.dumps(run_queries(args.sf_dir, args.cpus, args.queries.split(","), args.timed_runs, noop=args.noop)))
     elif args.plan:
         print(dump_plan(args.sf_dir, args.cpus, args.plan))

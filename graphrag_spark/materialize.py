@@ -177,122 +177,63 @@ def build_triples(normalized_rels: DataFrame, cmap: DataFrame, broadcast_map: bo
     return _pair_group(resolved)
 
 
-def surface_to_canonical_map(smap: DataFrame, cmap: DataFrame) -> DataFrame:
-    """Pre-composed surface -> canonical-name map (r3 VERDICT item 2):
-    smap resolves raw surface -> normalized name (normalize.py) and
-    cmap resolves lower(normalized) -> canonical survivor; composing
-    them once (both are vocabulary-bounded and usually
-    driver-materialized) lets ``build_triples_fused`` resolve each rel
-    endpoint with ONE broadcast join instead of two over the
-    O(corpus)-sized expanded pair frame — 2 joins total instead of 4.
+def build_triples_from_occurrences(occ: DataFrame, smap: DataFrame, cmap: DataFrame) -> DataFrame:
+    """``build_triples(normalize_rels(rels_from_occurrences(occ), smap),
+    cmap)`` with the surface->canonical resolution pushed BELOW the
+    quadratic pair expansion (r6, guide §2.3 "shuffle keys instead of
+    payloads").
 
-    Inner-join composition preserves the original semantics exactly:
-    surfaces normalizing to '' or to a low-value-filtered name have no
-    cmap row (the E12 semijoin), and same-canonical endpoint pairs are
-    dropped by the caller's subj != obj filter, which subsumes
-    normalize_rels' source != target pre-filter.
+    The surface->canonical map is composed ON THE DRIVER (r3 VERDICT
+    item 2, r6): smap (normalize.py) resolves raw surface -> normalized
+    name and cmap resolves lower(normalized) -> canonical survivor; one
+    capped collect of the distinct cmap pairs plus a Python hash join
+    reproduces the inner-join multiset semantics exactly (one row per
+    distinct (surface, name_key) per matching cmap pair). Surfaces
+    normalizing to '' or to a low-value-filtered name have no cmap row
+    (the E12 semijoin), and same-canonical endpoint pairs are dropped
+    by the subj != obj filter, which subsumes normalize_rels' source !=
+    target pre-filter.
 
-    Driver-materialized when both inputs are provably small, so joins
-    against it never re-execute the composition; falls back (flagged,
-    like the surface map itself) past the cap.
-
-    When the surface map is already a driver literal (the common,
-    vocabulary-bounded case) the composition runs ON THE DRIVER (r6):
-    one bounded collect of the distinct cmap pairs plus a Python hash
-    join replaces a distributed two-distinct + join + collect job —
-    the inner-join multiset semantics are reproduced exactly (one
-    output row per smap pair per matching cmap pair)."""
-    from .normalize import _materialize_small
-
-    if getattr(smap, "_graphrag_materialized", True):
-        cm_rows = cmap.select("name_key", "canonical_name").distinct().collect()
-        canons: dict[str, list[str]] = {}
-        for r in cm_rows:
-            canons.setdefault(r["name_key"], []).append(r["canonical_name"])
-        seen = set()
-        composed_rows = []
-        for r in smap.select("name", F.lower("norm_name").alias("name_key")).collect():
-            pair = (r["name"], r["name_key"])
-            if pair in seen:  # names distinct over (surface, name_key)
-                continue
-            seen.add(pair)
-            for canon in canons.get(r["name_key"], ()):
-                composed_rows.append((r["name"], canon))
-        out = smap.sparkSession.createDataFrame(
-            composed_rows, "surface string, canonical_name string"
-        )
-        out._graphrag_materialized = True  # type: ignore[attr-defined]
-        return out
-    names = smap.select(
-        F.col("name").alias("surface"), F.lower("norm_name").alias("name_key")
-    ).distinct()
-    cm = cmap.select("name_key", "canonical_name").distinct()
-    composed = names.join(cm, "name_key").select("surface", "canonical_name")
-    composed._graphrag_materialized = False  # type: ignore[attr-defined]
-    return composed
-
-
-def build_triples_fused(rels_raw: DataFrame, s2c: DataFrame, broadcast_map: bool = True) -> DataFrame:
-    """``build_triples`` semantics straight from RAW rel rows using the
-    pre-composed surface->canonical map: one broadcast join per
-    endpoint over the expanded pair frame (the 100 TB hot path — the
-    pair frame is O(corpus) while s2c is vocabulary-bounded).
-    Equivalence with normalize_rels + build_triples is pytest-asserted
-    and covered by the kg_triples full-recompute oracle.
-
-    Degradation contract: when the composed map fell back past the
-    driver-materialization cap (``_graphrag_materialized=False``, an
-    open-vocabulary extractor at 100x scale) the broadcast hint is
-    skipped regardless of ``broadcast_map`` — force-broadcasting an
-    unbounded map would OOM executors; the joins degrade to shuffle
-    joins exactly like the unfused path (normalize.maybe_broadcast)."""
-    bc = broadcast_map and getattr(s2c, "_graphrag_materialized", True)
-    resolved = (
-        rels_raw.join(
-            _hint(s2c.withColumnRenamed("surface", "name").withColumnRenamed("canonical_name", "subj"), bc),
-            "name",
-        )
-        .join(
-            _hint(s2c.withColumnRenamed("surface", "type_or_target").withColumnRenamed("canonical_name", "obj"), bc),
-            "type_or_target",
-        )
-        .filter(F.col("subj") != F.col("obj"))
-        .select("subj", "obj", F.col("score").alias("strength"), "description", "chunk_id")
-    )
-    return _pair_group(resolved)
-
-
-def build_triples_from_occurrences(occ: DataFrame, s2c: DataFrame, broadcast_map: bool = True) -> DataFrame:
-    """``build_triples_fused(rels_from_occurrences(occ), s2c)`` with the
-    surface->canonical resolution pushed BELOW the quadratic pair
-    expansion (r6, guide §2.3 "shuffle keys instead of payloads").
-
-    Shape: the vocabulary-bounded s2c map gains a dense int surface id
-    and broadcast-joins the O(corpus) occurrence rows ONCE (inner join —
+    Shape: the composed map gains a dense int surface id and
+    broadcast-joins the O(corpus) occurrence rows ONCE (inner join —
     occurrences whose surface has no surviving canonical drop here,
-    which removes exactly the pairs the fused path's endpoint inner
-    joins would have dropped, and cannot change counts between
-    surviving surfaces since per-chunk pairs are independent). The
-    expansion then carries (chunk_id, pos, sid, canon); the per-chunk
+    which removes exactly the pairs the endpoint inner joins of
+    ``build_triples`` would have dropped, and cannot change counts
+    between surviving surfaces since per-chunk pairs are independent).
+    The expansion then carries (chunk_id, pos, sid); the per-chunk
     pair-count aggregation keys on ints instead of three strings; the
-    two endpoint joins over the 30M-row grouped frame disappear
-    entirely. first(canon) per (sid) group is deterministic: canon is
-    functionally dependent on sid. Equivalence with the unfused
-    composition is pytest-asserted (tests/test_pipeline_pr.py).
+    two endpoint joins over the 30M-row grouped frame become int-keyed
+    broadcast probes. Equivalence with the unfused composition is
+    pytest-asserted (tests/test_pipeline_pr.py).
 
-    Falls back to the unfused path when the map exceeded the driver-
-    materialization cap (open-vocabulary extractor): a shuffle join is
-    cheaper over the grouped frame than over raw occurrences there."""
+    Degradation contract: when smap or the cmap pairs are past the
+    driver-materialization cap (``normalize._materialize_small``, an
+    open-vocabulary extractor at 100x scale) this IS the unfused
+    composition, with the cmap-side broadcast hints off — force-
+    broadcasting an unbounded map would OOM executors, so its joins
+    degrade to shuffle joins."""
     from .extraction import _STRENGTHS, REL_DESCRIPTION, REL_WINDOW, rels_from_occurrences
+    from .normalize import _materialize_small, normalize_rels
 
-    if not getattr(s2c, "_graphrag_materialized", True):
-        return build_triples_fused(rels_from_occurrences(occ), s2c, broadcast_map=False)
-    spark = occ.sparkSession
-    # s2c is a driver-built LocalRelation: collect() is driver-only
-    sid_rows = [(r["surface"], i, r["canonical_name"]) for i, r in enumerate(s2c.collect())]
-    if not sid_rows:
-        return build_triples_fused(rels_from_occurrences(occ), s2c, broadcast_map=broadcast_map)
-    m = spark.createDataFrame(sid_rows, "name string, sid int, canon string")
+    cm = None
+    if getattr(smap, "_graphrag_materialized", True):
+        cm = _materialize_small(cmap.select("name_key", "canonical_name").distinct(), "canonical_map")
+    if cm is None or not cm._graphrag_materialized:
+        return build_triples(normalize_rels(rels_from_occurrences(occ), smap), cmap, broadcast_map=False)
+    canons: dict[str, list[str]] = {}
+    for r in cm.collect():  # driver-built LocalRelation: no job
+        canons.setdefault(r["name_key"], []).append(r["canonical_name"])
+    # smap holds one row per (surface, messy type): compose over the
+    # distinct (surface, name_key) pairs
+    surfaces = dict.fromkeys(
+        (r["name"], r["name_key"])
+        for r in smap.select("name", F.lower("norm_name").alias("name_key")).collect()
+    )
+    composed = [(name, canon) for name, key in surfaces for canon in canons.get(key, ())]
+    m = occ.sparkSession.createDataFrame(
+        [(name, sid, canon) for sid, (name, canon) in enumerate(composed)],
+        "name string, sid int, canon string",
+    )
     # the expansion carries only (chunk_id, pos, sid): canon strings
     # re-attach on the GROUPED frame via int-keyed broadcast probes —
     # aggregating them (first(canon)) would put a string in the agg

@@ -196,10 +196,11 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
     """Collect a provably-small dataframe to the driver and re-create it
     as a literal, so broadcast joins against it never re-execute its
     (scan + shuffle) subtree — AQE otherwise re-runs that subtree once
-    per downstream query stage. The surface map is bounded by the alias
-    vocabulary (O(10^4) rows regardless of corpus size).
+    per downstream query stage. The surface and canonical maps are
+    bounded by the alias vocabulary (O(10^4) rows regardless of corpus
+    size).
 
-    Graceful degradation (r3 VERDICT item 5): if the map exceeds the
+    Graceful degradation (r3 VERDICT item 5): if the frame exceeds the
     cap — an open-vocabulary extractor at 100x corpus scale — the job
     must DEGRADE, not abort: the original (distributed) frame is
     returned unchanged, flagged so ``maybe_broadcast`` skips the
@@ -210,7 +211,7 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
         import warnings
 
         warnings.warn(
-            f"{context}: surface map exceeds {_MAX_SURFACE_MAP_ROWS} rows; "
+            f"{context} exceeds {_MAX_SURFACE_MAP_ROWS} rows; "
             "falling back to shuffle joins (no driver materialization)",
             stacklevel=2,
         )
@@ -265,8 +266,8 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     vocabulary payload table instead of a full corpus scan + distinct.
     Non-occurring surfaces are inert: every consumer joins the map
     INNER on surfaces that did occur (normalize_mentions/normalize_rels
-    on extraction rows, surface_to_canonical_map on the canonical map
-    built from actual mentions)."""
+    on extraction rows, build_triples_from_occurrences on the canonical
+    map built from actual mentions)."""
     if "type_or_target" not in mentions_raw.columns:
         from .extraction import _surface_payload_rows
 

@@ -1,18 +1,35 @@
-"""End-to-end KG-construction pipeline with per-stage lineage + resume.
+"""End-to-end KG-construction pipeline, declared once as a stage list.
 
-Stage DAG (all DataFrame jobs, each committed to its own parquet dir):
+``STAGES`` is the whole DAG in build order. Each ``Stage`` names the
+upstream stages its build reads, its build function and its committed
+layout:
 
-  documents(spans) ──> chunks ──> extracted ──> entities ──> cmap
-                                     │                        │
-                                     └────────> triples <─────┤
-                                                mentions <────┤
-                                                nodes    <────┘
+  chunks     <- documents          chunk rows + embedding
+  extracted  <- chunks             mention occurrences (or long rows)
+  entities   <- extracted          dedup + alias-dictionary link
+  cmap       <- entities           connected-components canonical map
+  nodes      <- cmap               partitioned by entity_type
+  mentions   <- extracted, cmap    bucketed by entity_id
+  triples    <- extracted, cmap    bucketed by subj
 
-Each committed stage appends rows to a ``_lineage`` table (stage,
-stage_hash, partition_id, doc_id_min, doc_id_max, row_count,
-committed_at). A rerun recomputes a stage only when its stage hash
-(params + upstream hash) has no committed match — that is the
-kill/resume contract (BASELINE.json north_star; SURVEY.md §4 item 4).
+Two runners execute that list:
+
+- ``run_in_memory`` builds every stage into one lazy DataFrame graph and
+  persists the ``cached`` stages (tests, bench.py, the flagship query).
+- ``KGPipeline.run`` writes each stage to its own table, appends
+  per-partition rows to a ``_lineage`` table (stage, stage_hash,
+  partition_id, doc_id_min, doc_id_max, row_count, committed_at) and
+  reads the stage back. A rerun reads a stage back instead of building
+  it when its stage hash (params + upstream hashes) is the latest one
+  committed — the kill/resume contract (BASELINE.json north_star;
+  SURVEY.md §4 item 4).
+
+The runners differ only in the extraction input: in memory, the fused
+chunk+scan pass over the documents, because nothing is committed to
+read from; checkpointed, the scanner over the committed chunks.
+Intermediates several stages share (the surface map, the normalized
+mentions, the canonical-map broadcast guard) are derived on first use
+inside a build, so a stage that is read back never pays for them.
 
 The reference runs this flow per-document with asyncio/threads
 (ingestion/document_processor.py:394-750); here every stage is one
@@ -26,6 +43,8 @@ import json
 import os
 import time
 from dataclasses import dataclass, field
+from functools import cached_property
+from typing import Callable, NamedTuple
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -39,47 +58,150 @@ LINEAGE_SCHEMA = (
 )
 
 
-def run_in_memory(
-    spark: SparkSession,
-    docs: DataFrame,
-    chunk_size: int = chunking.CHUNK_SIZE,
-    overlap: int = chunking.CHUNK_OVERLAP,
-    extractor=None,
-) -> dict[str, DataFrame]:
-    """Checkpoint-free pipeline composition (tests / flagship query):
-    same stages as KGPipeline.run but as one lazy DataFrame graph.
+@dataclass(frozen=True)
+class Stage:
+    """One node of the KG DAG. ``inputs`` are the upstream stages its
+    build reads (their hashes key this stage's hash); ``partition_by``
+    and ``bucket_col`` are the committed layout; ``doc_col`` is the
+    column whose per-partition range the lineage rows record;
+    ``run_in_memory`` persists the ``cached`` stages."""
 
-    ``extractor`` (r3 VERDICT item 3) plugs a custom extraction stage —
-    typically ``extraction.llm_extractor(respond_fn)``, the reference's
-    batched LLM call (core/entity_extraction.py:448-472) — in place of
-    the deterministic occurrence matcher. A custom extractor is a
-    callable ``chunks_df -> DataFrame`` emitting either long-format
-    EXTRACT_SCHEMA rows (``output_format = 'long'``, the LLM contract)
-    or OCCURRENCE_SCHEMA rows (``output_format = 'occurrences'``).
-    The default (None) path is unchanged: ONE Python extraction pass
-    emits mention *occurrences* (with positions) and is the only cached
-    intermediate; per-chunk entity rows and the quadratic relationship
-    expansion are derived relationally (JVM-side, map-side partial
-    aggregation) — bit-equivalent to the det_extract contract path
-    (tested).
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[[KGRun], DataFrame]
+    partition_by: tuple[str, ...] = ()
+    bucket_col: str | None = None
+    doc_col: str | None = None
+    cached: bool = False
 
-    Long-format extractors route rels through the self-discovering
-    normalize_rels + build_triples path: an open-vocabulary LLM may
-    emit relationship targets that never appear as entities, so the
-    rel surface set cannot be assumed a subset of the mention surface
-    map (the occurrence contract guarantees that; an LLM does not)."""
+
+class _Views(NamedTuple):
+    """What the downstream stages read off the extracted rows."""
+
+    mentions_raw: DataFrame
+    surfaces: DataFrame  # the surface map's input
+    rels_norm: Callable[[], DataFrame]
+    triples: Callable[[DataFrame], DataFrame]  # cmap -> triples
+
+
+class KGRun:
+    """One run of ``STAGES``: its parameters, the stage outputs so far
+    (``out``) and the intermediates several stages share, each derived
+    on first use."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        docs: DataFrame,
+        chunk_size: int = chunking.CHUNK_SIZE,
+        overlap: int = chunking.CHUNK_OVERLAP,
+        salt_buckets: int = linking.SALT_BUCKETS,
+        extractor=None,
+        in_memory: bool = True,
+    ):
+        self.spark = spark
+        self.docs = docs
+        self.chunk_size = chunk_size
+        self.overlap = overlap
+        self.salt_buckets = salt_buckets
+        self.extractor = extractor
+        self.in_memory = in_memory
+        self.out: dict[str, DataFrame] = {}
+
+    def build(self, stage: Stage) -> DataFrame:
+        """The in-memory step: build ``stage``, persisting it if cached."""
+        df = stage.build(self)
+        self.out[stage.name] = df.persist() if stage.cached else df
+        return self.out[stage.name]
+
+    @cached_property
+    def chunks_base(self) -> DataFrame:
+        return chunking.with_quality(
+            chunking.chunk_documents(document_text(self.docs), self.chunk_size, self.overlap)
+        )
+
+    @cached_property
+    def views(self) -> _Views:
+        """The extraction-format branch. Occurrence rows (the default
+        scanner's narrow shape) read their surface map off the alias
+        vocabulary, and their triples resolve below the pair expansion.
+        Long-format rows (``output_format = 'long'``, an LLM extractor)
+        take the self-discovering normalize_rels + build_triples path:
+        an open-vocabulary LLM may emit relationship targets that never
+        appear as entities, so the rel surface set cannot be assumed a
+        subset of the mention surface map (the occurrence contract
+        guarantees that; an LLM does not)."""
+        ex = self.out["extracted"]
+        if getattr(self.extractor, "output_format", "occurrences") == "occurrences":
+            return _Views(
+                extraction.entities_from_occurrences(ex),
+                ex,
+                lambda: normalize.normalize_rels(extraction.rels_from_occurrences(ex), self.smap),
+                lambda cmap: materialize.build_triples_from_occurrences(ex, self.smap, cmap),
+            )
+        mentions_raw = ex.filter(F.col("kind") == "entity")
+        return _Views(
+            mentions_raw,
+            mentions_raw,
+            lambda: normalize.normalize_rels(ex.filter(F.col("kind") == "rel")),
+            lambda cmap: materialize.build_triples(
+                self.rels_norm, cmap, broadcast_map=self.broadcast_cmap
+            ),
+        )
+
+    @cached_property
+    def smap(self) -> DataFrame:
+        return normalize.materialize_surface_map(self.views.surfaces)
+
+    @cached_property
+    def mentions_norm(self) -> DataFrame:
+        df = normalize.normalize_mentions(self.views.mentions_raw, self.smap)
+        return df.persist() if self.in_memory else df
+
+    @cached_property
+    def rels_norm(self) -> DataFrame:
+        return self.views.rels_norm()
+
+    @cached_property
+    def broadcast_cmap(self) -> bool:
+        # broadcast the canonical map only while it provably fits —
+        # with an open-vocabulary extractor the map grows with distinct
+        # entities and a forced broadcast would OOM at corpus scale
+        return self.out["cmap"].count() <= materialize.BROADCAST_MAP_MAX_ROWS
+
+
+def _chunks(run: KGRun) -> DataFrame:
     from .embeddings import embed_chunks
 
-    chunks_base = chunking.with_quality(
-        chunking.chunk_documents(document_text(docs), chunk_size, overlap)
-    )
-    # persisted chunk rows carry their embedding like the reference's
-    # chunk nodes (core/graph_db.py:174-203); extraction reads the
-    # narrow base columns so the vector never rides through that shuffle
-    chunks = chunks_base.join(
-        embed_chunks(chunks_base).select("chunk_id", "embedding"), "chunk_id"
-    )
-    fmt = getattr(extractor, "output_format", "occurrences") if extractor else "occurrences"
+    # chunk rows carry their embedding like the reference's chunk nodes
+    # (core/graph_db.py:174-203); the in-memory extractor reads the
+    # narrow base columns, and the checkpointed one is protected by
+    # parquet column pruning, so the vector never rides through its
+    # shuffle
+    base = run.chunks_base
+    return base.join(embed_chunks(base).select("chunk_id", "embedding"), "chunk_id")
+
+
+def _extracted(run: KGRun) -> DataFrame:
+    """The one per-runner difference. Checkpointed, the extractor reads
+    the committed chunks. In memory, the default extractor is the fused
+    chunk+scan pass (r6, guide §4.1: chunk text never round-trips
+    through the JVM between two MapInPandas stages), and a custom one
+    reads the lazy chunk rows without embeddings.
+
+    A custom extractor (r3 VERDICT item 3) — typically
+    ``extraction.llm_extractor(respond_fn)``, the reference's batched
+    LLM call (core/entity_extraction.py:448-472) — is a callable
+    ``chunks_df -> DataFrame`` emitting OCCURRENCE_SCHEMA rows or
+    long-format EXTRACT_SCHEMA rows (``output_format = 'long'``)."""
+    if not run.in_memory:
+        return (run.extractor or extraction.extract_occurrences)(run.out["chunks"])
+    if run.extractor is None:
+        occ = extraction.extract_occurrences_from_docs(
+            document_text(run.docs), run.chunk_size, run.overlap
+        )
+    else:
+        occ = run.extractor(run.chunks_base)
     # The extraction cache is persisted ALREADY HASH-PARTITIONED BY
     # chunk_id (r6, guide §2.4 "remove shuffles outright"): every hot
     # consumer clusters on a chunk_id-prefixed key — the per-chunk
@@ -90,64 +212,58 @@ def run_in_memory(
     # rows at cache time replaces one exchange per consumer over the
     # 4x-larger expanded frames (InMemoryRelation preserves the cached
     # plan's output partitioning, verified in plans/r06).
-    if fmt == "occurrences":
-        if extractor is None:
-            # fused chunk+scan pass (r6, guide §4.1): identical
-            # occurrence rows, but chunk text never round-trips through
-            # the JVM between two MapInPandas stages
-            occ = extraction.extract_occurrences_from_docs(
-                document_text(docs), chunk_size, overlap
-            ).repartition("chunk_id").persist()
-        else:
-            occ = extractor(chunks_base).repartition("chunk_id").persist()
-        mentions_raw = extraction.entities_from_occurrences(occ)
-        rels_raw = extraction.rels_from_occurrences(occ)
-        extracted = mentions_raw.unionByName(rels_raw)
-        # surface map from raw occurrences: same distinct surface set as
-        # mentions_raw but skips re-running its groupBy
-        smap = normalize.materialize_surface_map(occ)
-    else:
-        occ = extractor(chunks_base).repartition("chunk_id").persist()
-        mentions_raw = occ.filter(F.col("kind") == "entity")
-        rels_raw = occ.filter(F.col("kind") == "rel")
-        extracted = occ
-        smap = normalize.materialize_surface_map(mentions_raw)
-    mentions_norm = normalize.normalize_mentions(mentions_raw, smap).persist()
-    rels_norm = normalize.normalize_rels(rels_raw, smap if fmt == "occurrences" else None)
-    # persisted: canonical_map references this frame THREE times (CC
-    # edges, members, reps) across two separate actions — the union-find
-    # edge collect materializes the cache once and the cmap
-    # materialization then reads it instead of re-running the salted
-    # dedup + link chain (~20 AQE jobs -> ~6 at sf0.01, and the 4N-side
-    # per-job overhead is exactly where small-amplify scaling
-    # efficiency goes; the frame is one row per distinct surface key,
-    # i.e. vocabulary-bounded)
-    entities = linking.link_entities(
-        linking.dedup_entities(mentions_norm), linking.alias_dictionary(spark)
-    ).persist()
-    cmap = materialize.canonical_map(entities).persist()
-    if fmt == "occurrences":
-        # triples resolve straight from raw OCCURRENCES via the
-        # pre-composed surface->canonical map (r6): resolution is
-        # broadcast-joined once below the quadratic pair expansion, the
-        # pair-count aggregation keys on dense int surface ids, and no
-        # join touches the grouped pair frame at all; rels_norm stays
-        # available lazily for consumers of the normalized view
-        s2c = materialize.surface_to_canonical_map(smap, cmap)
-        triples = materialize.build_triples_from_occurrences(occ, s2c)
-    else:
-        triples = materialize.build_triples(rels_norm, cmap)
-    return {
-        "chunks": chunks,
-        "extracted": extracted,
-        "entities": entities,
-        "cmap": cmap,
-        "mentions_norm": mentions_norm,
-        "rels_norm": rels_norm,
-        "nodes": materialize.build_nodes(cmap),
-        "mentions": materialize.build_mentions(mentions_norm, cmap),
-        "triples": triples,
-    }
+    return occ.repartition("chunk_id")
+
+
+def _entities(run: KGRun) -> DataFrame:
+    return linking.link_entities(
+        linking.dedup_entities(run.mentions_norm, run.salt_buckets),
+        linking.alias_dictionary(run.spark),
+    )
+
+
+STAGES: tuple[Stage, ...] = (
+    Stage("chunks", (), _chunks, doc_col="doc_id"),
+    Stage("extracted", ("chunks",), _extracted, doc_col="doc_id", cached=True),
+    # cached: canonical_map reads entities THREE times (CC edges,
+    # members, reps) across two actions — the union-find edge collect
+    # materializes the cache once and the cmap materialization reads it
+    # instead of re-running the salted dedup + link chain
+    Stage("entities", ("extracted",), _entities, cached=True),
+    Stage("cmap", ("entities",), lambda run: materialize.canonical_map(run.out["entities"]), cached=True),
+    Stage(
+        "nodes", ("cmap",), lambda run: materialize.build_nodes(run.out["cmap"]),
+        partition_by=("entity_type",),
+    ),
+    Stage(
+        "mentions", ("extracted", "cmap"),
+        lambda run: materialize.build_mentions(
+            run.mentions_norm, run.out["cmap"], broadcast_map=run.broadcast_cmap
+        ),
+        doc_col="doc_id", bucket_col="entity_id",
+    ),
+    Stage(
+        "triples", ("extracted", "cmap"), lambda run: run.views.triples(run.out["cmap"]),
+        bucket_col="subj",
+    ),
+)
+
+
+def run_in_memory(
+    spark: SparkSession,
+    docs: DataFrame,
+    chunk_size: int = chunking.CHUNK_SIZE,
+    overlap: int = chunking.CHUNK_OVERLAP,
+    extractor=None,
+) -> dict[str, DataFrame]:
+    """Checkpoint-free runner: every stage of ``STAGES`` as one lazy
+    DataFrame graph, plus the normalized ``mentions_norm`` and
+    ``rels_norm`` views. ``extractor`` plugs a custom extraction stage
+    (see ``_extracted``); None is the deterministic occurrence scanner."""
+    run = KGRun(spark, docs, chunk_size, overlap, extractor=extractor)
+    for stage in STAGES:
+        run.build(stage)
+    return {**run.out, "mentions_norm": run.mentions_norm, "rels_norm": run.rels_norm}
 
 
 @dataclass
@@ -232,7 +348,7 @@ class KGPipeline:
             return {}
         return {r["stage"]: r["stage_hash"] for r in rows}
 
-    def _commit(self, stage: str, stage_hash: str, df: DataFrame, doc_col: str | None, table: str | None = None) -> None:
+    def _commit(self, stage: str, stage_hash: str, doc_col: str | None, table: str | None) -> None:
         """Append per-partition lineage rows for a just-written stage."""
         out = self._read_stage(self._path(stage), table)
         if doc_col is not None and doc_col in out.columns:
@@ -260,32 +376,21 @@ class KGPipeline:
         )
         lineage.write.mode("append").parquet(self._lineage_path())
 
-    def _run_stage(
-        self,
-        stage: str,
-        upstream_hash: str,
-        build,
-        doc_col: str | None = "doc_id",
-        resume: bool = True,
-        partition_by: list[str] | None = None,
-        bucket_col: str | None = None,
-    ) -> tuple[DataFrame, str]:
-        h = self.stage_hash(stage, upstream_hash)
-        path = self._path(stage)
-        table = f"{self.iceberg_prefix}.{stage}" if self.iceberg_prefix else None
-        if resume and self._committed().get(stage) == h and self._stage_output_exists(path, table):
-            return self._read_stage(path, table), h
+    def _run_stage(self, stage: Stage, h: str, run: KGRun, committed: bool) -> DataFrame:
+        path = self._path(stage.name)
+        table = f"{self.iceberg_prefix}.{stage.name}" if self.iceberg_prefix else None
+        if committed and self._stage_output_exists(path, table):
+            return self._read_stage(path, table)
         t0 = time.time()
-        df = build()
         # single writer seam (hash-bucket layout + optional Iceberg)
         materialize.write_table(
-            df, path, partition_by=partition_by,
-            buckets=self.buckets if bucket_col else None,
-            bucket_col=bucket_col, iceberg_table=table,
+            stage.build(run), path, partition_by=list(stage.partition_by),
+            buckets=self.buckets if stage.bucket_col else None,
+            bucket_col=stage.bucket_col, iceberg_table=table,
         )
-        self._commit(stage, h, df, doc_col, table)
-        self.stage_times[stage] = time.time() - t0
-        return self._read_stage(path, table), h
+        self._commit(stage.name, h, stage.doc_col, table)
+        self.stage_times[stage.name] = time.time() - t0
+        return self._read_stage(path, table)
 
     def _read_stage(self, path: str, table: str | None) -> DataFrame:
         if table is not None:
@@ -300,100 +405,20 @@ class KGPipeline:
     # ---------------------------------------------------------------- stages
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        spark = self.spark
-        docs = spark.read.parquet(self.corpus_path)
-
-        from .embeddings import embed_chunks
-
-        def _build_chunks() -> DataFrame:
-            base = chunking.with_quality(
-                chunking.chunk_documents(document_text(docs), self.chunk_size, self.chunk_overlap)
-            )
-            # stored chunk rows carry their embedding (reference
-            # core/graph_db.py:174-203); downstream stages that don't
-            # need the vector are protected by parquet column pruning
-            return base.join(embed_chunks(base).select("chunk_id", "embedding"), "chunk_id")
-
-        chunks, h_chunks = self._run_stage("chunks", "root", _build_chunks, resume=resume)
-
-        # occurrence rows are the checkpointed extraction artifact —
-        # ~5x fewer rows than the long entity+rel format, and the rel
-        # expansion is re-derived relationally on resume. A custom
-        # extractor (the seam) replaces this stage; its committed rows
-        # are whatever format it emits, tagged into the stage hash.
-        extract_fn = self.extractor or extraction.extract_occurrences
-        fmt = getattr(self.extractor, "output_format", "occurrences") if self.extractor else "occurrences"
-        extracted, h_ex = self._run_stage(
-            "extracted", h_chunks, lambda: extract_fn(chunks), resume=resume
+        """Checkpointed runner: each stage of ``STAGES`` is read back if
+        committed under its current hash, else built, written, committed
+        to lineage and read back."""
+        run = KGRun(
+            self.spark, self.spark.read.parquet(self.corpus_path), self.chunk_size,
+            self.chunk_overlap, self.salt_buckets, self.extractor, in_memory=False,
         )
-
-        if fmt == "occurrences":
-            mentions_raw = extraction.entities_from_occurrences(extracted)
-            rels_raw = extraction.rels_from_occurrences(extracted)
-            smap = normalize.materialize_surface_map(extracted)
-        else:
-            mentions_raw = extracted.filter(F.col("kind") == "entity")
-            rels_raw = extracted.filter(F.col("kind") == "rel")
-            smap = normalize.materialize_surface_map(mentions_raw)
-        mentions_norm = normalize.normalize_mentions(mentions_raw, smap)
-
-        entities, h_ent = self._run_stage(
-            "entities",
-            h_ex,
-            lambda: linking.link_entities(
-                linking.dedup_entities(mentions_norm, self.salt_buckets),
-                linking.alias_dictionary(spark),
-            ),
-            doc_col=None,
-            resume=resume,
-        )
-
-        cmap, h_cmap = self._run_stage(
-            "cmap", h_ent, lambda: materialize.canonical_map(entities), doc_col=None, resume=resume
-        )
-
-        nodes, _ = self._run_stage(
-            "nodes", h_cmap, lambda: materialize.build_nodes(cmap), doc_col=None, resume=resume,
-            partition_by=["entity_type"],
-        )
-        # broadcast the canonical map only while it provably fits —
-        # with an open-vocabulary extractor the map grows with distinct
-        # entities and a forced broadcast would OOM at corpus scale
-        bc_map = cmap.count() <= materialize.BROADCAST_MAP_MAX_ROWS
-        mentions, _ = self._run_stage(
-            "mentions", h_cmap,
-            lambda: materialize.build_mentions(mentions_norm, cmap, broadcast_map=bc_map),
-            resume=resume, bucket_col="entity_id",
-        )
-        # fused surface->canonical resolution (2 joins instead of 4 over
-        # the pair frame); s2c inherits smap's materialization state so
-        # the open-vocabulary fallback stays a shuffle join. Composed
-        # inside the stage lambda so a resume hit skips its collect.
-        # Long-format (LLM) extractors take the self-discovering
-        # normalize_rels path instead: their rel targets need not be a
-        # subset of the mention surface map (see run_in_memory).
-        if fmt == "occurrences":
-            build_triples = lambda: materialize.build_triples_from_occurrences(  # noqa: E731
-                extracted, materialize.surface_to_canonical_map(smap, cmap), broadcast_map=bc_map
-            )
-        else:
-            build_triples = lambda: materialize.build_triples(  # noqa: E731
-                normalize.normalize_rels(rels_raw), cmap, broadcast_map=bc_map
-            )
-        triples, _ = self._run_stage(
-            "triples", h_cmap, build_triples,
-            doc_col=None, resume=resume, bucket_col="subj",
-        )
-
-        return {
-            "chunks": chunks,
-            "extracted": extracted,
-            "entities": entities,
-            "cmap": cmap,
-            "nodes": nodes,
-            "mentions": mentions,
-            "triples": triples,
-        }
+        committed = self._committed() if resume else {}
+        hashes: dict[str, str] = {}
+        for stage in STAGES:
+            upstream = "|".join(hashes[s] for s in stage.inputs) or "root"
+            h = hashes[stage.name] = self.stage_hash(stage.name, upstream)
+            run.out[stage.name] = self._run_stage(stage, h, run, committed.get(stage.name) == h)
+        return run.out
 
 
 def register_views(tables: dict[str, DataFrame], prefix: str = "kg_") -> list[str]:

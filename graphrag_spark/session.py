@@ -14,17 +14,26 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _host_heap() -> str:
+    """Default driver heap: half the host's physical memory (MemTotal),
+    capped at 48g. A heap allowed to grow past physical memory gets the
+    JVM OOM-killed instead of spilling; the other half is left for the
+    Python workers, off-heap buffers and the OS."""
+    total_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**20
+    return f"{min(total_mb // 2, 48 * 1024)}m"
+
+
 def get_spark(
     app_name: str = "graphrag-spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 1))
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     # one BLAS thread per Python worker (guide §4): task parallelism
-    # already fills every core; threaded OpenBLAS inside 32 concurrent
-    # workers oversubscribes ~32x on the block-matmul operators. Set
+    # already fills every core; threaded OpenBLAS inside N concurrent
+    # workers oversubscribes ~N-fold on the block-matmul operators. Set
     # before the JVM starts so forked pyspark workers inherit it.
     for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(_v, "1")
@@ -48,9 +57,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # local mode: the driver JVM is the executor — size its heap
-        # for 32 concurrent tasks' shuffle/cache memory, or GC thrash
-        # destroys scaling
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # for every concurrent task's shuffle/cache memory, or GC
+        # thrash destroys scaling
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _host_heap()))
         .config("spark.sql.session.timeZone", "UTC")
         # session-catalog tables (the tested non-Iceberg catalog backend,
         # materialize.write_table) live under a scratch warehouse, not

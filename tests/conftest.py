@@ -12,10 +12,9 @@ N_TEST_DOCS = 80
 
 @pytest.fixture(scope="session")
 def spark():
-    # local[8]: the suite runs alone on a 32-core box, and most of its
-    # wall is Spark actions — 8 task slots roughly halves the end-to-end
-    # suite time vs local[4] without approaching machine saturation
-    s = get_spark(app_name="graphrag-tests", master="local[8]", shuffle_partitions=8)
+    # get_spark's default master: local[SPARK_GRAFT_CPUS], falling back
+    # to the host's CPU count
+    s = get_spark(app_name="graphrag-tests", shuffle_partitions=8)
     s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()

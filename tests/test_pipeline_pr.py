@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pyspark.sql.functions as F
 import pytest
@@ -68,9 +69,18 @@ def test_lineage_written(pipeline_out, spark):
     assert any(r["doc_id_min"] is not None for r in chunk_rows)
 
 
-def test_resume_skips_committed_stages(pipeline_out, spark, corpus_path):
+def test_resume_skips_committed_stages(pipeline_out, spark, corpus_path, monkeypatch):
+    """A full resume reads every stage back, and derives none of the
+    inputs a stage build needs (the surface map collect, entity dedup)."""
+    from graphrag_spark import linking, normalize
+
     p, out, wd = pipeline_out
-    before = {r["stage"]: r["committed_at"] for r in spark.read.parquet(os.path.join(wd, "_lineage")).collect()}
+
+    def unreachable(*_args, **_kwargs):
+        raise AssertionError("a full resume derived a stage input")
+
+    monkeypatch.setattr(normalize, "materialize_surface_map", unreachable)
+    monkeypatch.setattr(linking, "dedup_entities", unreachable)
     p2 = KGPipeline(spark, corpus_path, wd)
     out2 = p2.run()
     # no stage re-ran: no new lineage commits
@@ -101,6 +111,23 @@ def test_resume_recomputes_after_kill(pipeline_out, spark, corpus_path, tmp_path
     a = {tuple(r) for r in out["triples"].select("subj", "pred", "obj", "strength").collect()}
     b = {tuple(r) for r in out3["triples"].select("subj", "pred", "obj", "strength").collect()}
     assert a == b
+
+
+def test_in_memory_equals_checkpointed(kg_out, pipeline_out):
+    """The two runners of the one stage list (run_in_memory and
+    KGPipeline.run) give identical rows on every column."""
+    _, out, _ = pipeline_out
+
+    def rows(df, cols):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r)
+            for r in df.select(*cols).collect()
+        )
+
+    for stage in ("entities", "cmap", "nodes", "mentions", "triples"):
+        cols = kg_out[stage].columns
+        want = rows(kg_out[stage], cols)
+        assert want and rows(out[stage], cols) == want, stage
 
 
 def test_resume_param_revert_recomputes(spark, corpus_path, tmp_path_factory):
@@ -226,10 +253,11 @@ def test_fused_triples_equivalent(spark, corpus_path):
 
 
 def test_occurrence_fused_triples_equivalent(spark, corpus_path):
-    """r6: build_triples_from_occurrences (resolution below the pair
-    expansion, int-keyed pair counts) must be row-identical on every
-    column to the composition it replaces
-    (rels_from_occurrences -> build_triples_fused)."""
+    """r6: build_triples_from_occurrences (driver-composed
+    surface->canonical map, resolution below the pair expansion,
+    int-keyed pair counts) must be row-identical on every column to the
+    composition it replaces
+    (rels_from_occurrences -> normalize_rels -> build_triples)."""
     from graphrag_spark import chunking, extraction, linking, materialize, normalize
     from graphrag_spark.pipeline import document_text
 
@@ -244,7 +272,6 @@ def test_occurrence_fused_triples_equivalent(spark, corpus_path):
         linking.dedup_entities(mentions_norm), linking.alias_dictionary(spark)
     )
     cmap = materialize.canonical_map(entities)
-    s2c = materialize.surface_to_canonical_map(smap, cmap)
 
     def key(r):
         return (
@@ -252,12 +279,12 @@ def test_occurrence_fused_triples_equivalent(spark, corpus_path):
             tuple(r["source_chunks"]), r["n_observations"],
         )
 
-    a = sorted(map(key, materialize.build_triples_from_occurrences(occ, s2c).collect()))
+    a = sorted(map(key, materialize.build_triples_from_occurrences(occ, smap, cmap).collect()))
     b = sorted(
         map(
             key,
-            materialize.build_triples_fused(
-                extraction.rels_from_occurrences(occ), s2c
+            materialize.build_triples(
+                normalize.normalize_rels(extraction.rels_from_occurrences(occ), smap), cmap
             ).collect(),
         )
     )
@@ -265,31 +292,41 @@ def test_occurrence_fused_triples_equivalent(spark, corpus_path):
     assert a and a == b
 
 
-def test_surface_map_cap_fallback(spark, corpus_path, monkeypatch):
+@pytest.mark.parametrize("capped", ["surface_map", "canonical_map"])
+def test_surface_map_cap_fallback(spark, corpus_path, kg_out, monkeypatch, capped):
     """r3 VERDICT item 5: past the materialization cap the pipeline
     degrades to shuffle joins (flagged, warned) instead of aborting —
-    and produces identical triples."""
+    and produces identical triples. Each case caps one driver
+    collect: the surface map, or the canonical-map pairs that
+    build_triples_from_occurrences composes under a driver-materialized
+    surface map."""
     import warnings
 
     from graphrag_spark import normalize
     from graphrag_spark.pipeline import run_in_memory
 
-    docs = spark.read.parquet(corpus_path)
     want = {
         (r["subj"], r["pred"], r["obj"])
-        for r in run_in_memory(spark, docs)["triples"].select("subj", "pred", "obj").collect()
+        for r in kg_out["triples"].select("subj", "pred", "obj").collect()
     }
+    materialize_small = normalize._materialize_small
 
-    monkeypatch.setattr(normalize, "_MAX_SURFACE_MAP_ROWS", 5)
+    def cap_one(df, context):
+        with monkeypatch.context() as m:
+            if context == capped:
+                m.setattr(normalize, "_MAX_SURFACE_MAP_ROWS", 5)
+            return materialize_small(df, context)
+
+    monkeypatch.setattr(normalize, "_materialize_small", cap_one)
     with warnings.catch_warnings(record=True) as rec:
         warnings.simplefilter("always")
-        out = run_in_memory(spark, docs)
-        smap_like = out["triples"]
+        out = run_in_memory(spark, spark.read.parquet(corpus_path))
         got = {
             (r["subj"], r["pred"], r["obj"])
-            for r in smap_like.select("subj", "pred", "obj").collect()
+            for r in out["triples"].select("subj", "pred", "obj").collect()
         }
-    assert any("exceeds 5 rows" in str(w.message) for w in rec)
+    warned = {str(w.message) for w in rec if "exceeds 5 rows" in str(w.message)}
+    assert {w.split(" exceeds")[0] for w in warned} == {capped}
     assert got == want
 
 
@@ -341,31 +378,30 @@ def test_pluggable_llm_extractor_pr(spark, corpus_path, doc_rows, tmp_path_facto
 
 
 def test_fused_triples_skips_broadcast_past_cap(spark):
-    """Round 5 (r4 ADVICE): when the composed surface->canonical map
-    fell back past the driver-materialization cap (flagged
-    _graphrag_materialized=False), build_triples_fused must NOT force a
-    broadcast of the unbounded map, regardless of broadcast_map."""
+    """Round 5 (r4 ADVICE): when the surface map fell back past the
+    driver-materialization cap (flagged _graphrag_materialized=False),
+    build_triples_from_occurrences takes the unfused fallback and must
+    NOT force a broadcast of either unbounded map."""
     from graphrag_spark import materialize
 
-    rels = spark.createDataFrame(
-        [("a", "b", 0.9, "d", "c1")],
-        "name string, type_or_target string, score double, description string, chunk_id string",
+    occ = spark.createDataFrame(
+        [("c1", "d1", 0, "a"), ("c1", "d1", 5, "b")],
+        "chunk_id string, doc_id string, pos int, name string",
     )
-    s2c = spark.createDataFrame(
-        [("a", "Alpha"), ("b", "Beta")], "surface string, canonical_name string"
+    cmap = spark.createDataFrame(
+        [("a", "Alpha"), ("b", "Beta")], "name_key string, canonical_name string"
     )
-    s2c._graphrag_materialized = False
-    analyzed = (
-        materialize.build_triples_fused(rels, s2c, broadcast_map=True)
-        ._jdf.queryExecution().analyzed().toString()
-    )
-    assert "ResolvedHint" not in analyzed
 
-    s2c_ok = spark.createDataFrame(
-        [("a", "Alpha"), ("b", "Beta")], "surface string, canonical_name string"
-    )
-    analyzed_ok = (
-        materialize.build_triples_fused(rels, s2c_ok, broadcast_map=True)
-        ._jdf.queryExecution().analyzed().toString()
-    )
-    assert "ResolvedHint" in analyzed_ok
+    def broadcast_hints(smap_materialized: bool) -> int:
+        smap = spark.createDataFrame(
+            [("a", "a"), ("b", "b")], "name string, norm_name string"
+        )
+        smap._graphrag_materialized = smap_materialized
+        analyzed = (
+            materialize.build_triples_from_occurrences(occ, smap, cmap)
+            ._jdf.queryExecution().analyzed().toString()
+        )
+        return analyzed.count("strategy=broadcast")
+
+    assert broadcast_hints(False) == 0
+    assert broadcast_hints(True) > 0

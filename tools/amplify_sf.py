@@ -5,6 +5,12 @@ deterministic id offsets (and a per-replica text marker so replicated
 documents are near- but not exact-duplicates, like a real corpus);
 copies the TPC-H tables verbatim.
 
+Assumes numeric ``doc_id``/``vec_id``/``event_id`` columns: replicas
+offset them with integer addition, so a corpus with string ids fails
+here. The per-replica marker shifts every chunk offset of a replica,
+so amplified data serves perf measurement, not correctness
+comparisons.
+
 Usage: python tools/amplify_sf.py SRC_DIR DST_DIR K
 """
 

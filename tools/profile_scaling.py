@@ -1,53 +1,24 @@
-"""Phase-timed scaling profile: where does the non-scaling time live?
+"""Stage-timed scaling profile: where does the non-scaling time live?
 
-Mirrors bench.run_kg_pipeline but forces each pipeline phase separately
-and times it at local[8] then local[2], printing per-phase 2-core/8-core
-wall ratios (ideal = 4.0). Extra forcing actions inflate the total vs
-the real pipeline — the per-phase RATIO is the signal, not the sum.
+Builds the KG stage list (``pipeline.STAGES``) the way ``run_in_memory``
+does, forcing each stage in turn, at local[8] then local[2], and prints
+per-stage 2-core/8-core wall ratios (ideal = 4.0). The extra forcing
+actions inflate the total vs the real pipeline — the per-stage RATIO is
+the signal, not the sum.
 
-This is the instrument that found the round-5 scaling artifact bug.
-Measured at amplify 48 (sf0.1 x48, unpinned, quiet machine):
-
-    phase          local[8]   local[2]   ratio (ideal 4.0)
-    chunk            79.6 s    342.6 s    4.3   (Python workers)
-    embed            69.4 s    286.5 s    4.1   (Python workers)
-    extract         147.3 s    519.2 s    3.5   (Python workers)
-    mentions_norm    79.0 s    149.1 s    1.9   (JVM join/shuffle)
-    link            103.0 s    189.0 s    1.8   (JVM join/shuffle)
-    triples         158.4 s    352.4 s    2.2   (JVM join/shuffle)
-    smap/cmap/s2c    <9 s combined        —     (bounded driver maps)
-
-The Python-worker phases (CPU in exactly-N worker processes) scale
-~linearly; the allocation-heavy JVM phases do not, because local[N]
-caps only the TASK SLOTS — the JVM's GC/JIT/shuffle threads run on all
-physical cores, handing the 2-core side ~32 cores of GC for free. A
-real 2-executor cluster gets no such gift, which is why bench.py's
---scaling mode pins each measurement's process tree to exactly N CPUs
-(run this profile with PROFILE_PIN=1 to reproduce the pinned view; the
-JVM phases' ratios move toward 4x and the measured N-vs-4N efficiency
-rises accordingly).
-
-PINNED view, measured at amplify 12 (round 5, taskset 0-7 / 0-1):
-
-    phase          pinned[8]  pinned[2]  ratio   serial c_i*
-    chunk            20.6 s     76.0 s    3.69     2.2 s
-    embed            19.2 s     63.6 s    3.32     4.3 s
-    extract          33.6 s    125.7 s    3.75     2.9 s
-    mentions_norm    12.2 s     36.4 s    2.99     4.1 s
-    link             15.1 s     47.6 s    3.14     4.3 s
-    triples          25.6 s     72.8 s    2.85     9.8 s
-    sinks             5.7 s     16.3 s    2.87     2.2 s
-    smap/cmap/s2c    ~5.5 s     ~7.9 s    1.3-1.6  ~3.3 s
-    (* c_i = (4*p8 - p2)/3 from p2 = c + w/2, p8 = c + w/8)
-
-Pinning moved the JVM join/shuffle phases from 1.8-2.2x to ~2.9-3.1x
-as predicted. The residual non-scaling time is SPREAD — ~2-4 s per
-phase of stage-scheduling / broadcast-build / AQE-planning overhead —
-not concentrated in one stage; the fused triples leg is the largest
-single holder (9.8 s: broadcast-map build + two join stages + the
-salted two-phase pair aggregation each pay fixed stage overhead).
-Shaving the Amdahl c therefore means FEWER STAGES, not a faster
-stage: fuse/overlap phase boundaries or cut per-stage fixed costs.
+This is the instrument that found the round-5 scaling artifact bug. Its
+findings, measured on a 32-core box over an earlier phase split:
+the Python-worker stages (chunk, embed, extract) scaled ~linearly
+(ratio 3.5-4.3), the allocation-heavy JVM join/shuffle stages did not
+(1.8-2.2), because local[N] caps only the TASK SLOTS — the JVM's
+GC/JIT/shuffle threads run on all physical cores, handing the 2-core
+side every core's GC for free. A real 2-executor cluster gets no such
+gift, which is why bench.py's --scaling mode pins each measurement's
+process tree to exactly N CPUs (run this profile with PROFILE_PIN=1 to
+reproduce the pinned view: the JVM stages' ratios moved to ~2.9-3.1).
+The residual non-scaling time was SPREAD — ~2-4 s per stage of
+stage-scheduling / broadcast-build / AQE-planning overhead — so
+shaving the Amdahl constant means FEWER STAGES, not a faster stage.
 
 Usage:
     PYTHONPATH=/root/repo [PROFILE_AMPLIFY=48] [PROFILE_PIN=1] \
@@ -76,10 +47,8 @@ PIN = os.environ.get("PROFILE_PIN", "0") == "1"
 def run(cpus: int) -> dict:
     import pyspark.sql.functions as F
 
-    from graphrag_spark import chunking, extraction, linking, materialize, normalize
+    from graphrag_spark import pipeline
     from graphrag_spark.corpus import spans_from_flat
-    from graphrag_spark.embeddings import embed_chunks
-    from graphrag_spark.pipeline import document_text
     from graphrag_spark.session import get_spark
 
     def calibrate(spark):
@@ -108,47 +77,16 @@ def run(cpus: int) -> dict:
     docs = spans_from_flat(flat).persist()
     docs.count()
 
-    def phase(name, fn):
+    # each stage of the shared stage list, built and forced in order:
+    # a stage's time includes the driver-side inputs its build derives
+    # (surface map collect, canonical-map count and composition)
+    kg = pipeline.KGRun(spark, docs)
+    for stage in pipeline.STAGES:
         t0 = time.time()
-        out = fn()
-        times[name] = round(time.time() - t0, 2)
-        return out
-
-    chunks_base = chunking.with_quality(
-        chunking.chunk_documents(document_text(docs), chunking.CHUNK_SIZE, chunking.CHUNK_OVERLAP)
-    ).persist()
-    phase("chunk", lambda: chunks_base.count())
-    # chunk embeddings are NOT in the bench --scaling wall (the triples
-    # count never forces them); timed here only to show their scaling
-    emb = embed_chunks(chunks_base)
-    phase("embed", lambda: emb.count())
-    occ = extraction.extract_occurrences(chunks_base).persist()
-    phase("extract", lambda: occ.count())
-    mentions_raw = extraction.entities_from_occurrences(occ)
-    rels_raw = extraction.rels_from_occurrences(occ)
-    smap = phase("smap", lambda: normalize.materialize_surface_map(occ))
-    mentions_norm = normalize.normalize_mentions(mentions_raw, smap).persist()
-    phase("mentions_norm", lambda: mentions_norm.count())
-    entities = linking.link_entities(
-        linking.dedup_entities(mentions_norm), linking.alias_dictionary(spark)
-    ).persist()
-    phase("link", lambda: entities.count())
-    cmap = phase("cmap", lambda: materialize.canonical_map(entities).persist())
-    phase("cmap_force", lambda: cmap.count())
-    s2c = phase("s2c", lambda: materialize.surface_to_canonical_map(smap, cmap))
-    triples = materialize.build_triples_fused(rels_raw, s2c)
-    ntr = phase("triples", lambda: triples.count())
-    phase(
-        "sinks",
-        lambda: materialize.build_nodes(cmap)
-        .select(F.lit("n").alias("k"))
-        .unionAll(materialize.build_mentions(mentions_norm, cmap).select(F.lit("m").alias("k")))
-        .groupBy("k")
-        .count()
-        .collect(),
-    )
+        rows = kg.build(stage).count()
+        times[stage.name] = round(time.time() - t0, 2)
     times["calib_after"] = calibrate(spark)
-    times["n_triples"] = ntr
+    times["n_triples"] = rows  # triples is the last stage
     spark.stop()
     return times
 
