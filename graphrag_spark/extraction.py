@@ -526,14 +526,23 @@ def entities_from_occurrences(occ: DataFrame) -> DataFrame:
             "chunk_id", "doc_id", F.lit("entity").alias("kind"),
             "name", "type_or_target", "score", "description",
         ).distinct()
+    # narrow surfaces must come from the vocabulary: a name the payload
+    # table lacks fails the job (left join + raise_error, no extra job)
+    # instead of silently dropping its entity rows
     payload = surface_payload_df(occ.sparkSession)
+    etype = F.when(
+        F.col("type_or_target").isNull(),
+        F.raise_error(
+            F.concat(F.lit("narrow occurrence surface not in the vocabulary: "), F.col("name"))
+        ),
+    ).otherwise(F.col("type_or_target"))
     return (
         occ.select("chunk_id", "doc_id", "name")
         .distinct()
-        .join(F.broadcast(payload), "name")
+        .join(F.broadcast(payload), "name", "left")
         .select(
             "chunk_id", "doc_id", F.lit("entity").alias("kind"),
-            "name", "type_or_target", "score", "description",
+            "name", etype.alias("type_or_target"), "score", "description",
         )
     )
 

@@ -5,13 +5,25 @@ Covered (SURVEY.md §2): G3 bounded BFS expansion with distance decay,
 G4 entity neighborhood subgraph, G5 beam-search multi-hop paths (per-
 hop top-k via window rank), G6 strength-decay expansion, T1 vector
 search top-k, T4 entities by importance, T7 fulltext search, T8 chunk
-ordering. All are iterative self-joins + window top-k — no Python.
+ordering.
+
+The two serving walks, G5 beam paths and G6 strength-decay expansion,
+each have one query-keyed core (``_beam_paths``, ``_decay_scores``)
+that the per-query and batch operators call. A core picks its route
+once from the LIMIT-guarded driver adjacency (``_DRIVER_BEAM_MAX_ROWS``):
+under the cap a pure-Python hop loop per query, past it one distributed
+per-hop join + window top-k for all active queries, with a bounded
+collect between hops. Final rounding and ordering are Spark expressions
+over the literal rows, so both routes return identical rows. G3/G4 and
+the retrieval operators are set-oriented DataFrame plans.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+from .session import driver_cached
 
 DISTANCE_DECAY = {1: 0.3, 2: 0.2}  # reference core/graph_db.py:516-557
 DEFAULT_DECAY = 0.15
@@ -63,29 +75,12 @@ def neighborhood(triples: DataFrame, entity_name: str, hops: int = 1) -> DataFra
     )
 
 
-# Driver beam fast path (see beam_search_paths): adjacency + importance
-# maps collected once per (triples, nodes) table pair and cached by
-# input files — the same serving-index pattern as the fulltext _meta and
-# IVF matrix caches (INPUT-side state, never query results). Frames
-# without a stable file listing rebuild per call (tests, ad-hoc frames).
-_DRIVER_BEAM_CACHE: dict[tuple, object] = {}
+# Driver fast paths (r6, the canonicalize.py union-find pattern): the
+# adjacency and importance maps are collected once per (triples, nodes)
+# table pair, LIMIT-guarded at _DRIVER_BEAM_MAX_ROWS rows, and cached
+# by ``session.driver_cached`` (INPUT-side serving state, never query
+# results). Both graph walks below pick their route from them once.
 _DRIVER_BEAM_MAX_ROWS = 200_000
-
-
-def _driver_cached(df: DataFrame, tag: str, build):
-    """Build-and-cache driver state keyed by a frame's input files (no
-    stable listing -> uncached rebuild per call, e.g. test frames)."""
-    try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        files = ()
-    key = (tag, files) if files else None
-    if key is not None and key in _DRIVER_BEAM_CACHE:
-        return _DRIVER_BEAM_CACHE[key]
-    data = build()
-    if key is not None:
-        _DRIVER_BEAM_CACHE[key] = data
-    return data
 
 
 def _driver_graph_adjacency(triples: DataFrame):
@@ -106,7 +101,7 @@ def _driver_graph_adjacency(triples: DataFrame):
             adj.setdefault(r["obj"], []).append((r["subj"], r["strength"], sc))
         return adj
 
-    return _driver_cached(triples, "adj", build)
+    return driver_cached(triples, "adj", build)
 
 
 def _driver_importance(nodes: DataFrame):
@@ -118,7 +113,7 @@ def _driver_importance(nodes: DataFrame):
             return None
         return {r["name"]: r["importance"] for r in rows}
 
-    return _driver_cached(nodes, "imp", build)
+    return driver_cached(nodes, "imp", build)
 
 
 def _driver_beam_data(triples: DataFrame, nodes: DataFrame):
@@ -133,6 +128,134 @@ def _driver_beam_data(triples: DataFrame, nodes: DataFrame):
     return (adj, imp)
 
 
+_BEAM_SCHEMA = (
+    "qid string, tail string, path array<string>, path_score double, support array<string>"
+)
+
+
+def _beam_order(row):
+    """A hop's beam order: path_score desc, tail, '>'-joined path (UTF-8
+    byte order and code-point order agree, so Spark and Python sort
+    these strings alike)."""
+    return (-row[2], row[0], ">".join(row[1]))
+
+
+def _beam_paths(
+    triples: DataFrame,
+    nodes: DataFrame,
+    seeds_by_q: dict[str, list[str]],
+    max_hops: int = 2,
+    beam_size: int = 8,
+    min_edge_strength: float = 0.0,
+    with_support: bool = False,
+) -> list[tuple]:
+    """G5 beam search (core/graph_db.py:1628-1802) for every query's
+    seed set at once. Per hop and query: extend each beam path by one
+    edge (strength >= ``min_edge_strength``, no revisits), score it
+    0.5*path + 0.3*strength + 0.2*importance (:1766-1772) and keep the
+    top ``beam_size`` in ``_beam_order``. ``with_support`` accumulates
+    the traversed triples' source_chunks per path (graph_db.py:
+    1714-1728).
+
+    The route is chosen once. Under the driver cap the hop runs in pure
+    Python per query over the cached adjacency — no Spark job. Past it,
+    one distributed hop serves all active queries: the edges join a
+    broadcast frame of the current beams, a query-partitioned window
+    keeps each query's top ``beam_size``, and the <= |queries| x
+    beam_size survivors are collected for the next hop. Both routes use
+    the same IEEE score expression (left-associated) and beam order, so
+    their rows are identical.
+
+    Returns unrounded rows (qid, tail, path, path_score, support): each
+    query's seeds, then each hop's beam in beam order."""
+    beams = {
+        q: [(s, [s], 1.0, []) for s in dict.fromkeys(seeds)] for q, seeds in seeds_by_q.items()
+    }
+    driver_data = _driver_beam_data(triples, nodes)
+    edges = None
+    if driver_data is not None:
+        adj, impmap = driver_data
+
+        def hop(beams):
+            out = {}
+            for q, rows in beams.items():
+                expanded = []
+                for tail, path, ps, sup in rows:
+                    for dst, st, sc in adj.get(tail, ()):
+                        if st < min_edge_strength or dst in path:
+                            continue
+                        imp = impmap.get(dst)
+                        imp = 0.0 if imp is None else imp
+                        score = 0.5 * ps + 0.3 * st + 0.2 * imp
+                        nsup = list(dict.fromkeys(sup + sc)) if with_support else sup
+                        expanded.append((dst, path + [dst], score, nsup))
+                out[q] = sorted(expanded, key=_beam_order)[:beam_size]
+            return out
+
+    else:
+        spark = triples.sparkSession
+        cols = ["strength"] + (["source_chunks"] if with_support else [])
+        fwd = triples.select(F.col("subj").alias("src"), F.col("obj").alias("dst"), *cols)
+        # cached for the hop loop only (each hop re-reads it); the rows
+        # returned are literal, so the cache is dropped before returning
+        edges = (
+            fwd.unionByName(
+                fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), *cols)
+            )
+            .filter(F.col("strength") >= min_edge_strength)
+            .persist()
+        )
+        imp = nodes.select(F.col("name").alias("dst"), "importance")
+        new_support = (
+            F.array_distinct(F.concat("support", F.col("source_chunks")))
+            if with_support
+            else F.col("support")
+        )
+        bw = Window.partitionBy("qid").orderBy(
+            F.desc("path_score"), F.col("tail"), F.concat_ws(">", "path")
+        )
+
+        def hop(beams):
+            paths = spark.createDataFrame(
+                [(q, *r) for q, rows in beams.items() for r in rows], _BEAM_SCHEMA
+            )
+            expanded = (
+                edges.join(F.broadcast(paths.withColumnRenamed("tail", "src")), "src")
+                .join(F.broadcast(imp), "dst", "left")
+                .na.fill(0.0, ["importance"])
+                .filter(~F.array_contains("path", F.col("dst")))
+                .select(
+                    "qid",
+                    F.col("dst").alias("tail"),
+                    F.concat("path", F.array("dst")).alias("path"),
+                    (0.5 * F.col("path_score") + 0.3 * F.col("strength") + 0.2 * F.col("importance")).alias(
+                        "path_score"
+                    ),
+                    new_support.alias("support"),
+                )
+            )
+            out: dict[str, list] = {}
+            top = expanded.withColumn("_rk", F.row_number().over(bw)).filter(
+                F.col("_rk") <= beam_size
+            )
+            for r in top.collect():
+                out.setdefault(r["qid"], []).append(
+                    (r["tail"], list(r["path"]), r["path_score"], list(r["support"]))
+                )
+            return {q: sorted(rows, key=_beam_order) for q, rows in out.items()}
+
+    out_rows = [(q, *r) for q, rows in beams.items() for r in rows]
+    for _hop in range(max_hops):
+        beams = {q: rows for q, rows in beams.items() if rows}
+        if not beams:
+            break
+        beams = hop(beams)
+        out_rows.extend((q, *r) for q, rows in beams.items() for r in rows)
+    if edges is not None:
+        edges.unpersist()
+    return out_rows
+
+
 def beam_search_paths(
     triples: DataFrame,
     nodes: DataFrame,
@@ -142,112 +265,22 @@ def beam_search_paths(
     min_edge_strength: float = 0.0,
     with_support: bool = False,
 ) -> DataFrame:
-    """G5 (core/graph_db.py:1628-1802): per-hop beam expansion; path
-    score = 0.5*path + 0.3*strength + 0.2*importance (:1766-1772);
-    visited filtering; global beam per hop via window rank.
+    """G5 (core/graph_db.py:1628-1802): per-hop beam expansion from
+    ``seeds`` (``_beam_paths`` for one query); path score =
+    0.5*path + 0.3*strength + 0.2*importance (:1766-1772); visited
+    filtering; global beam per hop.
 
-    ``with_support`` additionally accumulates the traversed triples'
+    ``with_support`` additionally returns the traversed triples'
     source_chunks per path (the reference's per-hop supporting chunk
     ids, graph_db.py:1714-1728) for path-provenance retrieval.
 
-    Execution shape: the per-hop expansion + global beam runs
-    DISTRIBUTED (edges join a <=beam_size broadcast frame; the beam is
-    a TakeOrderedAndProject — parallel partial top-k per partition,
-    merged on the driver — never a single-partition window); the
-    surviving <=beam_size rows are collected per hop so the next hop
-    joins a literal frame and the final result is literal — one
-    bounded job per hop, no checkpoint lineage, no union-of-
-    checkpoints job at consumption.
-
-    Driver fast path (r6, the canonicalize.py union-find pattern): when
-    the edge and node frames are LIMIT-guarded small, the hop loop runs
-    in pure Python over a cached driver adjacency — zero jobs per
-    request instead of one per hop plus two broadcast builds. The
-    arithmetic is the identical IEEE expression (0.5*ps + 0.3*st +
-    0.2*imp, left-associated), the per-hop ordering key is the same
-    (desc score, tail, '>'-joined path; UTF-8 byte order and code-point
-    order agree), and the final round/sort_array still run as the SAME
-    Spark expressions over the literal result — so rows are
-    bit-identical to the distributed loop (oracled by kg_beam_paths)."""
-    spark = triples.sparkSession
-    driver_data = _driver_beam_data(triples, nodes)
-    if driver_data is not None:
-        adj, impmap = driver_data
-        beam_rows = [(s, [s], 1.0, []) for s in dict.fromkeys(seeds)]
-        out_rows = list(beam_rows)
-        for _hop in range(max_hops):
-            expanded = []
-            for tail, path, ps, sup in beam_rows:
-                for dst, st, sc in adj.get(tail, ()):
-                    if st < min_edge_strength or dst in path:
-                        continue
-                    imp = impmap.get(dst)
-                    imp = 0.0 if imp is None else imp
-                    score = 0.5 * ps + 0.3 * st + 0.2 * imp
-                    nsup = list(dict.fromkeys(sup + sc)) if with_support else sup
-                    expanded.append((dst, path + [dst], score, nsup))
-            expanded.sort(key=lambda r: (-r[2], r[0], ">".join(r[1])))
-            beam_rows = expanded[:beam_size]
-            out_rows.extend(beam_rows)
-        out = spark.createDataFrame(
-            out_rows, "tail string, path array<string>, path_score double, support array<string>"
-        )
-        cols = ["path", F.round("path_score", 6).alias("path_score")]
-        if with_support:
-            cols.append(F.sort_array("support").alias("support"))
-        return out.select(*cols)
-    if with_support:
-        sc = triples.select(
-            F.col("subj").alias("src"), F.col("obj").alias("dst"), "strength", "source_chunks"
-        )
-        edges = sc.unionByName(
-            sc.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "strength", "source_chunks"
-            )
-        ).filter(F.col("strength") >= min_edge_strength)
-    else:
-        edges = undirected_edges(triples).filter(F.col("strength") >= min_edge_strength)
-    # cached for the hop loop only (each hop re-reads it); the returned
-    # frame is literal, so the cache is dropped before returning
-    edges = edges.persist()
-    imp = nodes.select(F.col("name").alias("dst"), "importance")
-    beam_schema = (
-        "tail string, path array<string>, path_score double, support array<string>"
+    The final round/sort_array run as Spark expressions over the literal
+    rows, so either route's output is bit-identical (oracled by
+    kg_beam_paths). Returns (path, path_score[, support])."""
+    rows = _beam_paths(
+        triples, nodes, {"": seeds}, max_hops, beam_size, min_edge_strength, with_support
     )
-    beam_rows = [(s, [s], 1.0, []) for s in dict.fromkeys(seeds)]
-    out_rows = list(beam_rows)
-    for _hop in range(max_hops):
-        paths = spark.createDataFrame(beam_rows, beam_schema)
-        new_support = (
-            F.array_distinct(F.concat("support", F.col("source_chunks")))
-            if with_support
-            else F.col("support")
-        )
-        expanded = (
-            edges.join(F.broadcast(paths.withColumnRenamed("tail", "src")), "src")
-            .join(F.broadcast(imp), "dst", "left")
-            .na.fill(0.0, ["importance"])
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                F.col("dst").alias("tail"),
-                F.concat("path", F.array("dst")).alias("path"),
-                (0.5 * F.col("path_score") + 0.3 * F.col("strength") + 0.2 * F.col("importance")).alias(
-                    "path_score"
-                ),
-                new_support.alias("support"),
-            )
-        )
-        beam_rows = [
-            (r["tail"], list(r["path"]), r["path_score"], list(r["support"]))
-            for r in expanded.orderBy(
-                F.desc("path_score"), F.col("tail"), F.concat_ws(">", "path")
-            )
-            .limit(beam_size)
-            .collect()
-        ]
-        out_rows.extend(beam_rows)
-    edges.unpersist()
-    out = spark.createDataFrame(out_rows, beam_schema)
+    out = triples.sparkSession.createDataFrame(rows, _BEAM_SCHEMA)
     cols = ["path", F.round("path_score", 6).alias("path_score")]
     if with_support:
         cols.append(F.sort_array("support").alias("support"))
@@ -364,76 +397,22 @@ def batch_beam_search_paths(
     min_edge_strength: float = 0.0,
     id_col: str = "query_id",
 ) -> DataFrame:
-    """``beam_search_paths(with_support=True)`` for MANY queries'
-    seed sets in one hop-level loop (r4 VERDICT item 4): the beam
-    state carries ``id_col`` and the per-hop global beam becomes a
-    query-partitioned window, so a comparative-heavy batch pays ONE
-    edge-join job per hop for ALL queries instead of one beam loop
-    per query. Per query identical to the sequential beam
-    (pytest-asserted): same expansion join, same score formula
-    (0.5*path + 0.3*strength + 0.2*importance, core/graph_db.py:
-    1766-1772), same deterministic beam order (path_score desc, tail,
-    path string).
+    """``beam_search_paths(with_support=True)`` for MANY queries' seed
+    sets in one hop loop (``_beam_paths``; r4 VERDICT item 4): a
+    comparative-heavy batch pays at most one edge-join job per hop for
+    ALL queries, and none under the driver cap. Per query identical to
+    the sequential beam (pytest-asserted).
 
-    ``seed_df``: (id_col, name). The surviving beam is collected per
-    hop — bounded at |queries| x beam_size rows — so the next hop
-    joins a literal broadcast frame, exactly like the sequential
-    beam's per-hop collect. Returns (id_col, path, path_score,
+    ``seed_df``: (id_col, name). Returns (id_col, path, path_score,
     support)."""
-    spark = triples.sparkSession
-    sc = triples.select(
-        F.col("subj").alias("src"), F.col("obj").alias("dst"), "strength", "source_chunks"
+    seeds_by_q: dict[str, list[str]] = {}
+    for r in seed_df.select(id_col, "name").collect():
+        seeds_by_q.setdefault(r[id_col], []).append(r["name"])
+    rows = _beam_paths(
+        triples, nodes, seeds_by_q, max_hops, beam_size, min_edge_strength, with_support=True
     )
-    edges = sc.unionByName(
-        sc.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst"), "strength", "source_chunks"
-        )
-    ).filter(F.col("strength") >= min_edge_strength).persist()
-    imp = nodes.select(F.col("name").alias("dst"), "importance")
-    beam_schema = (
-        f"{id_col} string, tail string, path array<string>, "
-        "path_score double, support array<string>"
-    )
-    beam_rows = [
-        (r[id_col], r["name"], [r["name"]], 1.0, [])
-        for r in seed_df.select(id_col, "name").distinct().collect()
-    ]
-    out_rows = list(beam_rows)
-    bw = Window.partitionBy(id_col).orderBy(
-        F.desc("path_score"), F.col("tail"), F.concat_ws(">", "path")
-    )
-    for _hop in range(max_hops):
-        if not beam_rows:
-            break
-        paths = spark.createDataFrame(beam_rows, beam_schema)
-        expanded = (
-            edges.join(F.broadcast(paths.withColumnRenamed("tail", "src")), "src")
-            .join(F.broadcast(imp), "dst", "left")
-            .na.fill(0.0, ["importance"])
-            .filter(~F.array_contains("path", F.col("dst")))
-            .select(
-                id_col,
-                F.col("dst").alias("tail"),
-                F.concat("path", F.array("dst")).alias("path"),
-                (0.5 * F.col("path_score") + 0.3 * F.col("strength") + 0.2 * F.col("importance")).alias(
-                    "path_score"
-                ),
-                F.array_distinct(F.concat("support", F.col("source_chunks"))).alias(
-                    "support"
-                ),
-            )
-        )
-        beam_rows = [
-            (r[id_col], r["tail"], list(r["path"]), r["path_score"], list(r["support"]))
-            for r in expanded.withColumn("_rk", F.row_number().over(bw))
-            .filter(F.col("_rk") <= beam_size)
-            .drop("_rk")
-            .collect()
-        ]
-        out_rows.extend(beam_rows)
-    edges.unpersist()
-    return spark.createDataFrame(out_rows, beam_schema).select(
-        id_col, "path", F.round("path_score", 6).alias("path_score"),
+    return triples.sparkSession.createDataFrame(rows, _BEAM_SCHEMA).select(
+        F.col("qid").alias(id_col), "path", F.round("path_score", 6).alias("path_score"),
         F.sort_array("support").alias("support"),
     )
 
@@ -585,91 +564,99 @@ def _validate_adjacency_cap(adjacency: DataFrame, max_entity_connections: int) -
         )
 
 
-def expand_with_strength_decay_lazy(
-    adjacency: DataFrame,
-    seed_frame: DataFrame,
+def _decay_scores(
+    triples: DataFrame,
+    seeds_by_q: dict[str, list[str]],
+    max_depth: int = 2,
     max_entity_connections: int = 20,
     threshold: float = 0.1,
-) -> DataFrame:
-    """``expand_with_strength_decay`` (adjacency-served, max_depth=2 —
-    the serving defaults) as ONE lazy plan: no per-hop driver collect,
-    so a caller that folds the expansion into a larger query (e.g.
-    ``hybrid_retrieval``'s entity side) pays ZERO extra Spark jobs for
-    it — the whole 2-hop expansion executes inside the consumer's
-    single action. Bit-identical to the driver loop (pytest-asserted
-    via the adjacency-equality test; the loop itself is trace-tested
-    against a pure-Python oracle).
+    adjacency: DataFrame | None = None,
+) -> dict[str, dict[str, float]]:
+    """G6 strength-decay expansion (rag/retriever.py:256-407) for every
+    query's seed set at once. Per depth d and query: follow each of the
+    top ``max_entity_connections`` frontier entities (score desc, name)
+    along its top ``max_entity_connections`` relationships (strength
+    desc, dst), keep those with strength >= threshold, and score the
+    reached entity ``max(existing, strength * 0.7^(d+1))``; newly
+    reached entities form the next frontier. A query stops early once
+    its scored set exceeds 3x the connection cap (retriever.py:330-344).
 
-    The loop's data-dependent control flow maps to plan constructs:
-    - per-depth frontier cap -> row_number window over the (bounded,
-      <= cap x cap rows) candidate set;
-    - visited-set "only NEW entities form the next frontier" ->
-      left_anti join against the prior level's names;
-    - the early-stop rule (stop after depth 1 when the expanded set
-      exceeds 3x the cap) -> a scalar count broadcast-cross-joined as
-      a filter gate on the hop-2 contributions;
-    - "score = max(existing, strength * decay^d)" -> union all
-      per-level contributions and take max per name (exact: decay
-      scaling is monotone, so max commutes with it).
+    The route is chosen once. Under the driver cap each hop's neighbor
+    selection runs in pure Python over the cached adjacency — no Spark
+    job. Past it, one distributed job per depth serves all active
+    queries: the broadcast (query, frontier) frame joins ``adjacency``
+    (a ``build_entity_adjacency`` index, already ranked per src) when
+    given, else the edge frame under a (query, src)-partitioned rank
+    window; the <= frontier x cap neighbor rows are collected. The
+    score bookkeeping between depths is the same driver code for both.
 
-    ``seed_frame`` is a (name string) frame — may itself be a lazy
-    subtree (e.g. the seed-entity top-k off a retrieval scan). All
-    intermediate frames are vocabulary-bounded: every hop joins the
-    bounded adjacency index against a <= cap-row frontier."""
-    _validate_adjacency_cap(adjacency, max_entity_connections)
+    Returns {qid: {name: unrounded score}}."""
+    if adjacency is not None:
+        _validate_adjacency_cap(adjacency, max_entity_connections)
     cap = max_entity_connections
-    seeds_d = seed_frame.select("name").distinct()
-    # depth-0 frontier: top cap seeds by (score desc, name) — all seeds
-    # score 1.0, so alphabetical; single-partition window is fine (the
-    # frame is seed-scale by contract)
-    w_seed = Window.orderBy("name")
-    front1 = (
-        seeds_d.withColumn("_rk", F.row_number().over(w_seed))
-        .filter(F.col("_rk") <= cap)
-        .select(F.col("name").alias("src"))
-    )
-    hop = lambda front: (  # noqa: E731 — shared hop shape, bounded output
-        adjacency.join(F.broadcast(front), "src")
-        .filter((F.col("rk") <= cap) & (F.col("strength") >= threshold))
-        .groupBy(F.col("dst").alias("name"))
-        .agg(F.max("strength").alias("s"))
-    )
-    # ALL depth-1 candidates contribute a score (existing names via the
-    # final max-merge); only names NOT already scored form frontier 2
-    c1 = hop(front1).select("name", (F.col("s") * F.lit(0.7)).alias("score"))
-    new1 = c1.join(seeds_d, "name", "left_anti")
-    # early-stop gate: |scores after depth 1| = |seeds| + |new1|
-    # (disjoint by construction); depth 2 runs iff it is <= 3*cap
-    gate = (
-        seeds_d.select("name")
-        .unionAll(new1.select("name"))
-        .agg(F.count("*").alias("n_after1"))
-    )
-    w_front = Window.orderBy(F.desc("score"), "name")
-    front2 = (
-        new1.withColumn("_rk", F.row_number().over(w_front))
-        .filter(F.col("_rk") <= cap)
-        .select(F.col("name").alias("src"))
-    )
-    c2 = (
-        hop(front2)
-        .select("name", (F.col("s") * F.lit(0.7**2)).alias("score"))
-        .crossJoin(F.broadcast(gate))
-        .filter(F.col("n_after1") <= F.lit(3 * cap))
-        .select("name", "score")
-    )
-    scores = (
-        seeds_d.select("name", F.lit(1.0).alias("score"))
-        .unionAll(c1)
-        .unionAll(c2)
-        .groupBy("name")
-        .agg(F.max("score").alias("score"))
-    )
-    return (
-        scores.select("name", F.round("score", 6).alias("score"))
-        .orderBy(F.desc("score"), "name")
-        .limit(2 * cap)
-    )
+    adjd = _driver_graph_adjacency(triples)
+    edges = None
+    if adjd is not None:
+
+        def neighbors(front):
+            rels = []
+            for q, src in front:
+                ranked = sorted(adjd.get(src, ()), key=lambda e: (-e[1], e[0]))
+                rels.extend((q, dst, s) for dst, s, _sc in ranked[:cap] if s >= threshold)
+            return rels
+
+    else:
+        spark = triples.sparkSession
+        if adjacency is None:
+            # cached for the loop only: each depth re-reads the edge
+            # frame, and the scores returned are literal
+            edges = undirected_edges(triples).persist()
+        w = Window.partitionBy("qid", "src").orderBy(F.desc("strength"), "dst")
+
+        def neighbors(front):
+            f = F.broadcast(spark.createDataFrame(front, "qid string, src string"))
+            if adjacency is not None:
+                rels = adjacency.join(f, "src")
+            else:
+                rels = edges.join(f, "src").withColumn("rk", F.row_number().over(w))
+            return (
+                rels.filter((F.col("rk") <= cap) & (F.col("strength") >= threshold))
+                .select("qid", "dst", "strength")
+                .collect()
+            )
+
+    # the reference holds seeds in a dict/set — duplicates collapse
+    scores = {q: {s: 1.0 for s in dict.fromkeys(seeds)} for q, seeds in seeds_by_q.items()}
+    frontier = {q: dict(v) for q, v in scores.items()}
+    for d in range(max_depth):
+        front = [
+            (q, name)
+            for q, f in frontier.items()
+            for name, _ in sorted(f.items(), key=lambda kv: (-kv[1], kv[0]))[:cap]
+        ]
+        if not front:
+            break
+        cand: dict[str, dict[str, float]] = {}
+        for q, dst, s in neighbors(front):
+            qc = cand.setdefault(q, {})
+            if s > qc.get(dst, float("-inf")):
+                qc[dst] = s
+        decay = 0.7 ** (d + 1)
+        for q in list(frontier):
+            new: dict[str, float] = {}
+            for name, s in cand.get(q, {}).items():
+                cs = s * decay
+                if name in scores[q]:
+                    scores[q][name] = max(scores[q][name], cs)
+                else:
+                    new[name] = cs
+            scores[q].update(new)
+            frontier[q] = new
+            if len(scores[q]) > 3 * cap:
+                del frontier[q]
+    if edges is not None:
+        edges.unpersist()
+    return scores
 
 
 def expand_with_strength_decay(
@@ -682,151 +669,60 @@ def expand_with_strength_decay(
 ) -> DataFrame:
     """G6 — strength-decay entity expansion (rag/retriever.py:256-407,
     settings defaults: max_entity_connections=20,
-    expansion_similarity_threshold=0.1, max_expansion_depth=2).
-
-    Per depth d: follow each frontier entity's top
-    ``max_entity_connections`` relationships by strength, keep those
-    with strength >= threshold, and score the reached entity
-    ``max(existing, strength * 0.7^(d+1))``; newly reached entities
-    form the next frontier. Expansion stops early once the expanded
-    set exceeds 3x the connection cap, and the final set is trimmed to
-    the top 2x by score (retriever.py:330-344).
+    expansion_similarity_threshold=0.1, max_expansion_depth=2):
+    ``_decay_scores`` for one query, trimmed to the top 2x cap by score
+    (retriever.py:330-344).
 
     Documented divergence: the reference caps the entities *processed*
     per depth in frontier insertion order (a latency guard in its
     online loop); this set-oriented version caps the frontier
     deterministically by (score desc, name asc). Returns (name, score).
 
-    Execution shape (query-serving latency): the per-depth neighbor
-    top-k window runs DISTRIBUTED (an entity with 10^6 edges never
-    lands on the driver — the window bounds the result to
-    frontier x max_entity_connections rows before it leaves the
-    cluster); the score bookkeeping between depths is driver-side over
-    that bounded set, so the whole expansion is ONE bounded-collect
-    job per depth instead of a checkpoint + count + union chain —
-    per-iteration barriers no executor count amortizes (same rationale
-    as the canonicalize.py driver fast path). Final rounding/ordering
-    stays in Spark expressions so results are bit-identical to the
-    former all-DataFrame loop (oracle-checked).
-
     Pass ``adjacency`` (a ``build_entity_adjacency`` table with
-    max_connections >= max_entity_connections) to serve each hop from
-    the materialized index — an index lookup per hop instead of an
-    edge-frame window; results are identical (pytest-asserted). The
-    constraint is VALIDATED, not just documented: an index built with
-    a smaller cap would silently truncate each hop's candidate set, so
-    a known-too-small ``_graphrag_adj_cap`` raises (disk-loaded
-    indexes: re-attach the cap with ``attach_adjacency_cap``).
-    """
-    spark = triples.sparkSession
-    if adjacency is not None:
-        _validate_adjacency_cap(adjacency, max_entity_connections)
-    # Driver fast path (r6): with the cached LIMIT-guarded adjacency
-    # (shared with beam_search_paths) the whole expansion is pure
-    # Python and the result a literal frame — zero jobs per call. The
-    # per-hop neighbor selection reproduces the window exactly (rank
-    # over (strength desc, dst asc) BEFORE the threshold filter); the
-    # score bookkeeping below is the same code either way, and the
-    # final round/order/limit stay Spark expressions — bit-identical
-    # (kg_decay_expansion oracle + fast==distributed pytest).
-    adjd = _driver_graph_adjacency(triples)
-    if adjd is not None:
-        scores = {s: 1.0 for s in dict.fromkeys(seeds)}
-        frontier = dict(scores)
-        for d in range(max_depth):
-            top_frontier = sorted(frontier.items(), key=lambda kv: (-kv[1], kv[0]))
-            decay = 0.7 ** (d + 1)
-            cand: dict[str, float] = {}
-            for src, _ in top_frontier[:max_entity_connections]:
-                ranked = sorted(adjd.get(src, ()), key=lambda e: (-e[1], e[0]))
-                for dst, s, _sc in ranked[:max_entity_connections]:
-                    if s >= threshold and s > cand.get(dst, float("-inf")):
-                        cand[dst] = s
-            new: dict[str, float] = {}
-            for name, s in cand.items():
-                cs = s * decay
-                if name in scores:
-                    scores[name] = max(scores[name], cs)
-                else:
-                    new[name] = cs
-            scores.update(new)
-            frontier = new
-            if len(scores) > 3 * max_entity_connections:
-                break
-        out = spark.createDataFrame(sorted(scores.items()), "name string, score double")
-        return (
-            out.select("name", F.round("score", 6).alias("score"))
-            .orderBy(F.desc("score"), "name")
-            .limit(2 * max_entity_connections)
-        )
-    if adjacency is not None:
-        if max_depth == 2:
-            # the serving configuration: one lazy plan, zero per-hop
-            # driver collects — a consuming action executes the whole
-            # expansion as part of its own job
-            seed_frame = spark.createDataFrame(
-                [(s,) for s in dict.fromkeys(seeds)], "name string"
-            )
-            return expand_with_strength_decay_lazy(
-                adjacency, seed_frame, max_entity_connections, threshold
-            )
-        edges = None
-        adj = adjacency
-    else:
-        # cached for the loop only: each depth re-reads the edge frame,
-        # and the function's result is literal — unpersisted at return
-        edges = undirected_edges(triples).persist()
-        adj = None
-    # the reference holds seeds in a dict/set — duplicates collapse
-    scores: dict[str, float] = {s: 1.0 for s in dict.fromkeys(seeds)}
-    frontier = dict(scores)
-    for d in range(max_depth):
-        top_frontier = sorted(frontier.items(), key=lambda kv: (-kv[1], kv[0]))
-        f = spark.createDataFrame(
-            [(n,) for n, _ in top_frontier[:max_entity_connections]], "src string"
-        )
-        if adj is not None:
-            rels = (
-                adj.join(F.broadcast(f), "src")
-                .filter((F.col("rk") <= max_entity_connections) & (F.col("strength") >= threshold))
-                .select("dst", "strength")
-                .collect()
-            )
-        else:
-            w = Window.partitionBy("src").orderBy(F.desc("strength"), "dst")
-            rels = (
-                edges.join(F.broadcast(f), "src")
-                .withColumn("_rk", F.row_number().over(w))
-                .filter((F.col("_rk") <= max_entity_connections) & (F.col("strength") >= threshold))
-                .select("dst", "strength")
-                .collect()
-            )
-        decay = 0.7 ** (d + 1)
-        cand: dict[str, float] = {}
-        for r in rels:
-            s = r["strength"]
-            if s > cand.get(r["dst"], float("-inf")):
-                cand[r["dst"]] = s
-        new: dict[str, float] = {}
-        for name, s in cand.items():
-            cs = s * decay
-            if name in scores:
-                scores[name] = max(scores[name], cs)
-            else:
-                new[name] = cs
-        scores.update(new)
-        frontier = new
-        if len(scores) > 3 * max_entity_connections:
-            break
-    if edges is not None:
-        edges.unpersist()
-    out = spark.createDataFrame(
-        sorted(scores.items()), "name string, score double"
-    )
+    max_connections >= max_entity_connections) to serve each
+    distributed hop from the materialized index — an index lookup per
+    hop instead of an edge-frame window; results are identical
+    (pytest-asserted). The constraint is VALIDATED, not just
+    documented: an index built with a smaller cap would silently
+    truncate each hop's candidate set, so a known-too-small
+    ``_graphrag_adj_cap`` raises (disk-loaded indexes: re-attach the
+    cap with ``attach_adjacency_cap``).
+
+    The final round/order/limit stay Spark expressions over the literal
+    scores, so both routes are bit-identical (kg_decay_expansion oracle
+    + fast==distributed pytest)."""
+    scores = _decay_scores(
+        triples, {"": seeds}, max_depth, max_entity_connections, threshold, adjacency
+    )[""]
+    out = triples.sparkSession.createDataFrame(sorted(scores.items()), "name string, score double")
     return (
         out.select("name", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), "name")
         .limit(2 * max_entity_connections)
+    )
+
+
+def _batch_decay_frame(
+    triples: DataFrame,
+    seeds_by_q: dict[str, list[str]],
+    id_col: str,
+    max_depth: int = 2,
+    threshold: float = 0.1,
+) -> DataFrame:
+    """``expand_with_strength_decay`` for many queries (one
+    ``_decay_scores`` call): (id_col, name, score) after each query's
+    round -> (score desc, name) -> 2x-cap trim. Per query equal to the
+    per-query operator (pytest-asserted)."""
+    cap = 20
+    scores = _decay_scores(triples, seeds_by_q, max_depth, cap, threshold)
+    rows = [(q, n, s) for q, v in sorted(scores.items()) for n, s in sorted(v.items())]
+    tw = Window.partitionBy(id_col).orderBy(F.desc("score"), "name")
+    return (
+        triples.sparkSession.createDataFrame(rows, f"{id_col} string, name string, score double")
+        .select(id_col, "name", F.round("score", 6).alias("score"))
+        .withColumn("_rk", F.row_number().over(tw))
+        .filter(F.col("_rk") <= 2 * cap)
+        .drop("_rk")
     )
 
 
@@ -984,46 +880,20 @@ def hybrid_retrieval(
     top_chunks = (
         scored_top.orderBy(F.desc("similarity"), "chunk_id").limit(10).select("chunk_id")
     )
-    seed_frame = (
-        mentions.join(F.broadcast(top_chunks), "chunk_id")
+    # seeds: the top-5 entities (by importance) of the top-10 chunks,
+    # collected — the beam and decay walks both start from the list
+    seeds = [
+        r["name"]
+        for r in mentions.join(F.broadcast(top_chunks), "chunk_id")
         .join(nodes.select("entity_id", "name", "importance"), "entity_id")
         .groupBy("name")
         .agg(F.max("importance").alias("importance"))
         .orderBy(F.desc("importance"), "name")
         .limit(5)
-        .select("name")
-    )
-    # seeds are collected when a driver loop needs the literal list
-    # (the beam path side, edge-frame expansion without an adjacency
-    # index) — and, r6, whenever the cached driver adjacency can serve
-    # the expansion: one bounded seed-collect job plus a LITERAL
-    # expansion frame beats folding the whole lazy expansion subtree
-    # (its windows/anti-joins add ~5 stages of pure scheduling overhead
-    # per request at serving scale; measured ~1.6s vs ~2.5s per factual
-    # request). Past the driver cap the seed subtree stays LAZY and the
-    # request remains ONE action after the retrieval scan.
-    seeds: list[str] | None = None
-    if (
-        split["path_count"] > 0
-        or adjacency is None
-        or _driver_graph_adjacency(triples) is not None
-    ):
-        seeds = [r["name"] for r in seed_frame.collect()]
-        seed_frame = chunks.sparkSession.createDataFrame(
-            [(s,) for s in seeds], "name string"
-        )
-    if adjacency is not None:
-        if seeds is not None:
-            # seeds already on the driver (path route): the expansion
-            # driver fast path can serve a literal frame — fewer plan
-            # stages in the final action (falls back to the lazy plan
-            # internally past the cap)
-            exp = expand_with_strength_decay(triples, seeds, adjacency=adjacency)
-        else:
-            exp = expand_with_strength_decay_lazy(adjacency, seed_frame)
-    else:
-        exp = expand_with_strength_decay(triples, seeds) if seeds else None
-    if exp is not None:
+        .collect()
+    ]
+    if seeds:
+        exp = expand_with_strength_decay(triples, seeds, adjacency=adjacency)
         entity_side = (
             mentions.join(nodes.select("entity_id", "name"), "entity_id")
             .join(exp, "name")
@@ -1640,82 +1510,6 @@ def batch_retrieve(
     )
 
 
-def _batch_decay_expand(
-    triples: DataFrame,
-    seeds_by_q: dict[str, list[str]],
-    max_depth: int = 2,
-    max_entity_connections: int = 20,
-    threshold: float = 0.1,
-) -> DataFrame:
-    """Strength-decay expansion for MANY queries in one set of jobs:
-    the per-depth neighbor top-k window runs once over the union of
-    every active query's frontier (partitioned by (query_id, src) — the
-    per-src rank is query-independent but partitioning per query keeps
-    the per-query cap semantics exact), and the score bookkeeping is
-    the same driver-side dict logic as ``expand_with_strength_decay``,
-    keyed by query. Per query, the output rows equal the per-query
-    operator exactly (pytest-asserted).
-
-    Returns (query_id, name, score) after each query's final
-    round -> (score desc, name) -> 2x-cap trim."""
-    spark = triples.sparkSession
-    edges = undirected_edges(triples).persist()
-    scores: dict[str, dict[str, float]] = {
-        q: {s: 1.0 for s in dict.fromkeys(s_list)} for q, s_list in seeds_by_q.items()
-    }
-    frontier: dict[str, dict[str, float]] = {q: dict(v) for q, v in scores.items()}
-    active = {q for q, v in frontier.items() if v}
-    for d in range(max_depth):
-        f_rows = []
-        for q in sorted(active):
-            top = sorted(frontier[q].items(), key=lambda kv: (-kv[1], kv[0]))
-            f_rows.extend((q, n) for n, _ in top[:max_entity_connections])
-        if not f_rows:
-            break
-        f = spark.createDataFrame(f_rows, "qid string, src string")
-        w = Window.partitionBy("qid", "src").orderBy(F.desc("strength"), "dst")
-        rels = (
-            edges.join(F.broadcast(f), "src")
-            .withColumn("_rk", F.row_number().over(w))
-            .filter((F.col("_rk") <= max_entity_connections) & (F.col("strength") >= threshold))
-            .select("qid", "dst", "strength")
-            .collect()
-        )
-        decay = 0.7 ** (d + 1)
-        cand: dict[str, dict[str, float]] = {}
-        for r in rels:
-            qc = cand.setdefault(r["qid"], {})
-            s = r["strength"]
-            if s > qc.get(r["dst"], float("-inf")):
-                qc[r["dst"]] = s
-        next_active = set()
-        for q in active:
-            new: dict[str, float] = {}
-            for name, s in cand.get(q, {}).items():
-                cs = s * decay
-                if name in scores[q]:
-                    scores[q][name] = max(scores[q][name], cs)
-                else:
-                    new[name] = cs
-            scores[q].update(new)
-            frontier[q] = new
-            if len(scores[q]) <= 3 * max_entity_connections and new:
-                next_active.add(q)
-        active = next_active
-        if not active:
-            break
-    edges.unpersist()
-    rows = [(q, n, s) for q, v in sorted(scores.items()) for n, s in sorted(v.items())]
-    out = spark.createDataFrame(rows, "query_id string, name string, score double")
-    tw = Window.partitionBy("query_id").orderBy(F.desc("score"), "name")
-    return (
-        out.select("query_id", "name", F.round("score", 6).alias("score"))
-        .withColumn("_rk", F.row_number().over(tw))
-        .filter(F.col("_rk") <= 2 * max_entity_connections)
-        .drop("_rk")
-    )
-
-
 def batch_retrieve_hybrid(
     chunks: DataFrame,
     nodes: DataFrame,
@@ -1739,11 +1533,11 @@ def batch_retrieve_hybrid(
     widening + per-query slot split as columns; one query-embedding
     Arrow pass; ONE broadcast cross join for every query's scored
     chunk scan; one seeds job; the multi-query decay expansion
-    (``_batch_decay_expand``); one entity-side rollup; the
+    (``_decay_scores``); one entity-side rollup; the
     (query_id, chunk_id)-keyed 3-way merge. The multi-hop PATH side
     runs HOP-BATCHED over all multi-hop-recommended queries' seeds at
-    once (``batch_multi_hop_retrieval`` — one edge-join job per hop
-    for the whole batch, not one beam loop per query); factual/simple
+    once (``batch_multi_hop_retrieval`` — at most one edge-join job per
+    hop for the whole batch, not one beam loop per query); factual/simple
     batches never pay it.
 
     Returns (query_id, chunk_id, source, hybrid_score)."""
@@ -1869,15 +1663,13 @@ def batch_retrieve_hybrid(
         seeds_by_q[r[id_col]].append(r["name"])
 
     # entity side: multi-query decay expansion + one rollup
-    exp = _batch_decay_expand(
-        triples, {q: s for q, s in seeds_by_q.items() if s}
-    )
+    exp = _batch_decay_frame(triples, seeds_by_q, id_col)
     ew = Window.partitionBy(id_col).orderBy(F.desc("similarity"), "chunk_id")
     ec_rows = [(q, m["entity_count"]) for q, m in qmeta.items()]
     ecdf = spark.createDataFrame(ec_rows, f"{id_col} string, ec int")
     entity_side = (
         mentions.join(nodes.select("entity_id", "name"), "entity_id")
-        .join(F.broadcast(exp.withColumnRenamed("query_id", id_col)), "name")
+        .join(F.broadcast(exp), "name")
         .groupBy(id_col, "chunk_id")
         .agg(F.max("score").alias("similarity"))
         .filter(F.col("similarity") >= expansion_threshold)
@@ -1889,8 +1681,8 @@ def batch_retrieve_hybrid(
 
     # path side: hop-batched beam search over ALL multi-hop queries'
     # seeds at once (r4 VERDICT item 4) — a comparative-heavy batch
-    # pays one edge-join job per hop instead of one beam loop per
-    # query; per query identical to multi_hop_retrieval (the seeds and
+    # pays at most one edge-join job per hop instead of one beam loop
+    # per query; per query identical to multi_hop_retrieval (the seeds and
     # query vectors are the exact frames the sequential calls used)
     mh_seed_rows = [
         (q, s)
@@ -2119,7 +1911,7 @@ def batch_retrieve_with_graph_expansion(
     - initial retrieval: ``batch_retrieve`` (one corpus pass for all
       queries, optionally through the IVF ``chunk_index``);
     - entity branch: per-(query, chunk) top-20 seed entities in one
-      window, then ``_batch_decay_expand`` — the hop-batched expansion
+      window, then ``_decay_scores`` — the hop-batched expansion
       already serving batch_retrieve_hybrid, whose per-query early-stop
       bookkeeping is exact; candidate chunks score/cap per query;
     - chunk branch: ``related_chunks(keys=[query_id])`` traverses every
@@ -2166,10 +1958,10 @@ def batch_retrieve_with_graph_expansion(
         seeds_by_q: dict[str, list[str]] = {}
         for r in seed_rows:
             seeds_by_q.setdefault(r[id_col], []).append(r["name"])
-        exp = _batch_decay_expand(
-            triples, seeds_by_q, max_depth=min(expand_depth, 2),
+        exp = _batch_decay_frame(
+            triples, seeds_by_q, id_col, max_depth=min(expand_depth, 2),
             threshold=expansion_threshold,
-        ).withColumnRenamed("query_id", id_col)
+        )
         ew = Window.partitionBy(id_col).orderBy(F.desc("similarity"), "chunk_id")
         ent_add = (
             mentions.join(nodes.select("entity_id", "name"), "entity_id")

@@ -246,8 +246,10 @@ def build_triples_from_occurrences(occ: DataFrame, smap: DataFrame, cmap: DataFr
     # partitioned self-join to sort-merge, which SORTS both O(corpus)
     # occurrence sides per partition; a per-partition hash build over
     # the narrow (chunk_id, pos, sid) rows skips both sorts and keeps
-    # the exchange-free placement (partition-local memory stays bounded
-    # by shuffle-partition count at scale)
+    # the exchange-free placement. The hash build holds a whole
+    # partition's build side in memory, so this holds only while no
+    # single chunk_id partition outgrows executor memory (hub-chunk
+    # skew breaks it; the sort-merge fallback is ROADMAP item 7)
     pairs = o1.join(o2.hint("SHUFFLE_HASH"), "chunk_id").filter(
         (F.col("p2") > F.col("p1"))
         & (F.col("p2") - F.col("p1") <= REL_WINDOW)

@@ -264,6 +264,9 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     are by construction a subset of the alias vocabulary — so the
     distinct (surface, messy_type) pair set is read straight off the
     vocabulary payload table instead of a full corpus scan + distinct.
+    The narrow shape's surfaces MUST come from the vocabulary: a surface
+    outside it has no map row here, and ``entities_from_occurrences``
+    fails the job on it rather than dropping it.
     Non-occurring surfaces are inert: every consumer joins the map
     INNER on surfaces that did occur (normalize_mentions/normalize_rels
     on extraction rows, build_triples_from_occurrences on the canonical

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import Broadcast
 from pyspark.sql import SparkSession
 
 
@@ -94,3 +95,34 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+# Driver-side serving state built once from an input table (the graph
+# adjacency and importance maps, the broadcast embedding matrix) and
+# reused while the table stays the same. The key is the frame's semantic
+# plan hash plus its input files: a filtered view of the same files has
+# another plan, and a rewritten table other part-file names, so neither
+# can hit the other's entry. One entry per tag; a broadcast it replaces
+# is unpersisted, not destroyed, because lazy frames built on it may
+# still run. Frames without a stable file listing (in-memory frames)
+# rebuild per call.
+DRIVER_CACHE: dict[object, tuple] = {}
+
+
+def driver_cached(df, tag, build):
+    """``build()``, cached under ``tag`` for this frame's plan and files."""
+    try:
+        files = tuple(sorted(df.inputFiles()))
+    except Exception:
+        files = ()
+    if not files:
+        return build()
+    key = (df.semanticHash(), files)
+    old = DRIVER_CACHE.get(tag)
+    if old is not None and old[0] == key:
+        return old[1]
+    value = build()
+    if old is not None and isinstance(old[1], Broadcast):
+        old[1].unpersist()
+    DRIVER_CACHE[tag] = (key, value)
+    return value

@@ -387,35 +387,24 @@ def _fits_broadcast(df: DataFrame) -> bool:
         return False
 
 
-# Broadcast-matrix cache for the numpy verify path, keyed by the
-# embedding table's input files (same serving pattern as the fulltext
-# _meta cache: the INPUT-side index is built once per process and
-# reused across verify calls; query results are never cached). A
-# rewritten table gets new part-file names, so stale hits cannot occur;
-# frames without a stable file listing (in-memory, post-shuffle) skip
-# the cache and rebuild per call.
-_MATRIX_BCAST_CACHE: dict[tuple, object] = {}
-
-
 def _matrix_broadcast(embeddings: DataFrame, id_col: str, vec_col: str):
-    try:
-        files = tuple(sorted(embeddings.inputFiles()))
-    except Exception:
-        files = ()
-    key = (files, id_col, vec_col) if files else None
-    if key is not None and key in _MATRIX_BCAST_CACHE:
-        return _MATRIX_BCAST_CACHE[key]
-    # Arrow driver transfer (guide §6): collect() row-boxes every
-    # vector element; toPandas lands numpy blocks directly
-    pdf_e = embeddings.select(id_col, vec_col).toPandas()
-    ids = pdf_e[id_col].to_numpy()
-    M = np.stack(pdf_e[vec_col].to_numpy()).astype(np.float64)
-    nrm = np.sqrt(_fold_dot(M, M))  # same fold as norm_col, once per row
-    order = np.argsort(ids, kind="stable")
-    bv = embeddings.sparkSession.sparkContext.broadcast((ids[order], M[order], nrm[order]))
-    if key is not None:
-        _MATRIX_BCAST_CACHE[key] = bv
-    return bv
+    """Broadcast (ids, matrix, norms) of the embedding table for the
+    numpy verify path, built once per table (``session.driver_cached``:
+    the INPUT-side index is reused across verify calls; query results
+    are never cached)."""
+    from .session import driver_cached
+
+    def build():
+        # Arrow driver transfer (guide §6): collect() row-boxes every
+        # vector element; toPandas lands numpy blocks directly
+        pdf_e = embeddings.select(id_col, vec_col).toPandas()
+        ids = pdf_e[id_col].to_numpy()
+        M = np.stack(pdf_e[vec_col].to_numpy()).astype(np.float64)
+        nrm = np.sqrt(_fold_dot(M, M))  # same fold as norm_col, once per row
+        order = np.argsort(ids, kind="stable")
+        return embeddings.sparkSession.sparkContext.broadcast((ids[order], M[order], nrm[order]))
+
+    return driver_cached(embeddings, ("matrix", id_col, vec_col), build)
 
 
 def verify_candidates_cosine(

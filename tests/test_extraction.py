@@ -105,6 +105,29 @@ def test_occurrence_derivation_equals_contract_path(spark, corpus_path):
     chunks.unpersist()
 
 
+def test_narrow_occurrence_outside_vocabulary_raises(spark):
+    """The narrow occurrence shape re-attaches its payload from the
+    vocabulary: a known surface gets its payload row, and a surface the
+    vocabulary lacks fails the job naming it instead of being dropped."""
+    import pytest
+
+    from graphrag_spark.extraction import (
+        OCCURRENCE_NARROW_SCHEMA,
+        _surface_payload_rows,
+        entities_from_occurrences,
+    )
+
+    name, etype, score, desc = _surface_payload_rows()[0]
+    known = [("d0_chunk_0", "d0", 0, name), ("d0_chunk_0", "d0", 40, name)]
+    ents = entities_from_occurrences(spark.createDataFrame(known, OCCURRENCE_NARROW_SCHEMA)).collect()
+    assert [(r["name"], r["type_or_target"], r["score"], r["description"]) for r in ents] == [
+        (name, etype, score, desc)
+    ]
+    unknown = known + [("d0_chunk_1", "d0", 5, "Zzyzx Unlisted Corp")]
+    with pytest.raises(Exception, match="Zzyzx Unlisted Corp"):
+        entities_from_occurrences(spark.createDataFrame(unknown, OCCURRENCE_NARROW_SCHEMA)).collect()
+
+
 def test_no_match_empty_sections():
     ents, rels = parse_extraction_response(det_extract_response("zzz qqq 123"))
     assert ents == [] and rels == []

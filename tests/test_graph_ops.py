@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from graphrag_spark import graph_ops, graph_query
+from graphrag_spark.session import DRIVER_CACHE
 
 
 @pytest.fixture(scope="module")
@@ -100,8 +101,6 @@ def test_beam_driver_fast_path_equals_distributed(kg, monkeypatch):
     """r6: the driver-adjacency beam fast path must be row-identical
     (paths, rounded scores, sorted support) to the distributed hop loop
     it short-circuits."""
-    from graphrag_spark import graph_query
-
     seeds = sorted(r["subj"] for r in kg["triples"].select("subj").distinct().limit(3).collect())
 
     def rows(df):
@@ -115,13 +114,29 @@ def test_beam_driver_fast_path_equals_distributed(kg, monkeypatch):
         )
     )
     monkeypatch.setattr(graph_query, "_DRIVER_BEAM_MAX_ROWS", 0)
-    graph_query._DRIVER_BEAM_CACHE.clear()
+    DRIVER_CACHE.clear()
     slow = rows(
         graph_query.beam_search_paths(
             kg["triples"], kg["nodes"], seeds, max_hops=2, beam_size=5, with_support=True
         )
     )
-    graph_query._DRIVER_BEAM_CACHE.clear()
+    # two queries through one over-cap hop loop: each query's rows equal
+    # its own single-query call
+    by_q = {"q1": seeds[:1], "q2": seeds[1:]}
+    seed_df = kg["triples"].sparkSession.createDataFrame(
+        [(q, s) for q, ss in by_q.items() for s in ss], "query_id string, name string"
+    )
+    batch = graph_query.batch_beam_search_paths(
+        kg["triples"], kg["nodes"], seed_df, max_hops=2, beam_size=5
+    )
+    for q, ss in by_q.items():
+        single = rows(
+            graph_query.beam_search_paths(
+                kg["triples"], kg["nodes"], ss, max_hops=2, beam_size=5, with_support=True
+            )
+        )
+        assert single and rows(batch.filter(F.col("query_id") == q)) == single
+    DRIVER_CACHE.clear()
     assert fast and fast == slow
 
 
@@ -526,70 +541,112 @@ def test_decay_expansion_via_adjacency_index(kg):
     assert over == 0
 
 
-def _expand_both_ways(spark, edges, seeds):
-    """(driver fast path, lazy adjacency plan) results for the same
-    synthetic graph — the equality harness for the fused expansion's
-    control-flow mapping. The lazy plan and the distributed loop are
-    FORCED (r6: the driver fast path would otherwise serve all
-    variants); the distributed loop is asserted equal inline."""
+def _expand_both_ways(monkeypatch, spark, edges, seeds):
+    """(driver route, forced over-cap route) results of the decay
+    expansion on one synthetic graph — the equality harness for the
+    shared hop loop's early-stop and trim bookkeeping. Each route runs
+    with and without the adjacency index; those pairs are asserted
+    equal inline."""
     triples = spark.createDataFrame(edges, "subj string, obj string, strength double")
     adj = graph_query.build_entity_adjacency(triples, max_connections=20)
-    direct = [
-        (r["name"], r["score"])
-        for r in graph_query.expand_with_strength_decay(triples, seeds).collect()
-    ]
-    old = graph_query._DRIVER_BEAM_MAX_ROWS
-    graph_query._DRIVER_BEAM_MAX_ROWS = 0
-    try:
-        lazy = [
+
+    def both():
+        plain = [
+            (r["name"], r["score"])
+            for r in graph_query.expand_with_strength_decay(triples, seeds).collect()
+        ]
+        via_adj = [
             (r["name"], r["score"])
             for r in graph_query.expand_with_strength_decay(
                 triples, seeds, adjacency=adj
             ).collect()
         ]
-        loop = [
-            (r["name"], r["score"])
-            for r in graph_query.expand_with_strength_decay(triples, seeds).collect()
-        ]
-    finally:
-        graph_query._DRIVER_BEAM_MAX_ROWS = old
-    assert loop == direct
-    return direct, lazy
+        assert plain == via_adj
+        return plain
+
+    driver = both()
+    monkeypatch.setattr(graph_query, "_DRIVER_BEAM_MAX_ROWS", 0)
+    return driver, both()
 
 
-def test_lazy_expansion_early_stop_gate(spark):
-    """Round 5: the fused one-plan expansion maps the driver loop's
-    early-stop rule (break after depth 1 when |scores| > 3*cap) to a
-    broadcast scalar filter gate. Engineered graph: 4 seeds x 20
-    distinct neighbors -> 84 scored names after hop 1 (> 60), so hop 2
-    must NOT run — each neighbor's strong (0.9) second-level edge would
+def test_decay_expansion_early_stop_gate(spark, monkeypatch):
+    """The early-stop rule (stop after depth 1 when |scores| > 3*cap)
+    holds on both routes. Engineered graph: 4 seeds x 20 distinct
+    neighbors -> 84 scored names after hop 1 (> 60), so hop 2 must NOT
+    run — each neighbor's strong (0.9) second-level edge would
     otherwise outrank the 0.35 hop-1 scores inside the top-40 trim."""
     edges = []
     for i in range(4):
         for j in range(20):
             edges.append((f"s{i}", f"n{i}{j:02d}", 0.5))
             edges.append((f"n{i}{j:02d}", f"m{i}{j:02d}", 0.9))
-    direct, lazy = _expand_both_ways(spark, edges, [f"s{i}" for i in range(4)])
-    assert direct == lazy
-    assert not [n for n, _ in lazy if n.startswith("m")]
-    assert all((f"s{i}", 1.0) in lazy for i in range(4))
+    driver, over_cap = _expand_both_ways(monkeypatch, spark, edges, [f"s{i}" for i in range(4)])
+    assert driver == over_cap
+    assert not [n for n, _ in over_cap if n.startswith("m")]
+    assert all((f"s{i}", 1.0) in over_cap for i in range(4))
 
 
-def test_lazy_expansion_second_hop_and_trim(spark):
+def test_decay_expansion_second_hop_and_trim(spark, monkeypatch):
     """Complement of the gate test: 1 seed x 20 neighbors stays under
     the early-stop bound, so hop 2 DOES run — second-level nodes score
-    0.9*0.49 and the 41-name result trims to 2*cap=40 identically in
-    both implementations (incl. the seed's max-merge against its own
-    hop-2 back-edge)."""
+    0.9*0.49 and the 41-name result trims to 2*cap=40 identically on
+    both routes (incl. the seed's max-merge against its own hop-2
+    back-edge)."""
     edges = []
     for j in range(20):
         edges.append(("s1", f"n{j:02d}", 0.5))
         edges.append((f"n{j:02d}", f"m{j:02d}", 0.9))
-    direct, lazy = _expand_both_ways(spark, edges, ["s1"])
-    assert direct == lazy
-    assert len(lazy) == 40
-    assert ("s1", 1.0) in lazy
-    assert ("m00", round(0.9 * 0.49, 6)) in lazy
+    driver, over_cap = _expand_both_ways(monkeypatch, spark, edges, ["s1"])
+    assert driver == over_cap
+    assert len(over_cap) == 40
+    assert ("s1", 1.0) in over_cap
+    assert ("m00", round(0.9 * 0.49, 6)) in over_cap
+
+
+def test_driver_cache_keys_on_plan(spark, tmp_path):
+    """The driver adjacency cache keys on the frame's plan as well as
+    its files: a filtered view of the same Parquet files must not be
+    served the unfiltered frame's adjacency (c is reachable only
+    through the filtered-out b-c edge)."""
+    path = str(tmp_path / "triples")
+    spark.createDataFrame(
+        [("a", "b", 0.9), ("b", "c", 0.2), ("a", "d", 0.5)],
+        "subj string, obj string, strength double",
+    ).write.parquet(path)
+    t = spark.read.parquet(path)
+    full = {r["name"] for r in graph_query.expand_with_strength_decay(t, ["a"]).collect()}
+    strong = {
+        r["name"]
+        for r in graph_query.expand_with_strength_decay(t.filter("strength > 0.4"), ["a"]).collect()
+    }
+    DRIVER_CACHE.clear()
+    assert "c" in full
+    assert strong == {"a", "b", "d"}
+
+
+def test_driver_cache_unpersists_replaced_broadcast(spark, tmp_path):
+    """One entry per tag: a new key replaces the entry and unpersists
+    the broadcast it held (never destroys it — lazy frames may still
+    read it)."""
+    from pyspark import Broadcast
+
+    from graphrag_spark.session import driver_cached
+
+    class Probe(Broadcast):
+        def __init__(self):
+            self.unpersisted = False
+
+        def unpersist(self, blocking=False):
+            self.unpersisted = True
+
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    t = spark.read.parquet(path)
+    first = driver_cached(t, "probe", Probe)
+    assert driver_cached(t, "probe", Probe) is first
+    second = driver_cached(t.filter("id > 0"), "probe", Probe)
+    DRIVER_CACHE.pop("probe")
+    assert second is not first and first.unpersisted and not second.unpersisted
 
 
 def test_decay_driver_fast_path_equals_distributed(kg, monkeypatch):
@@ -602,12 +659,26 @@ def test_decay_driver_fast_path_equals_distributed(kg, monkeypatch):
         for r in graph_query.expand_with_strength_decay(triples, seeds, max_depth=2).collect()
     ]
     monkeypatch.setattr(graph_query, "_DRIVER_BEAM_MAX_ROWS", 0)
-    graph_query._DRIVER_BEAM_CACHE.clear()
+    DRIVER_CACHE.clear()
     slow = [
         (r["name"], r["score"])
         for r in graph_query.expand_with_strength_decay(triples, seeds, max_depth=2).collect()
     ]
-    graph_query._DRIVER_BEAM_CACHE.clear()
+    # two queries through one over-cap hop loop: each query's rows equal
+    # its own single-query call
+    by_q = {"q1": seeds[:1], "q2": seeds[1:]}
+    batch = graph_query._batch_decay_frame(triples, by_q, "query_id")
+    for q, ss in by_q.items():
+        single = [
+            (r["name"], r["score"])
+            for r in graph_query.expand_with_strength_decay(triples, ss, max_depth=2).collect()
+        ]
+        got = [
+            (r["name"], r["score"])
+            for r in batch.filter(F.col("query_id") == q).orderBy(F.desc("score"), "name").collect()
+        ]
+        assert single and got == single
+    DRIVER_CACHE.clear()
     assert fast and fast == slow
 
 
