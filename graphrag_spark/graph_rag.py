@@ -17,6 +17,12 @@ Node parity:
 - generate:  prepare_sources + response_metadata
              (rag/nodes/generation.py:45-146); the answer text itself
              is the LLM boundary.
+
+Serving cost: the stored tables' driver state (graph adjacency, the J1
+edges, the hybrid-retrieval index) is built on the first request and
+reused while the same frames are passed, so under the driver cap a
+warm ``graph_rag_query`` spends its Spark jobs on the expansion
+branches, the reasoning checkpoint and the sources, not on retrieval.
 """
 
 from __future__ import annotations
@@ -111,10 +117,10 @@ def graph_rag_query(
         # enhancement keeps retrieval scores for the original rows and
         # assigns expansion rows their traversal similarity
         # localCheckpoint: sources + metadata each re-execute the
-        # context plan, whose enhancement subtree contains the J1 edge
-        # build — the most expensive part of the whole composition —
-        # and lineage truncation keeps downstream plan trees bounded
-        # (same rationale as the batch twin's checkpoints)
+        # context plan (the J1 edges themselves are a cached checkpoint,
+        # chunk_similarity_edges_for), and lineage truncation keeps
+        # downstream plan trees bounded (same rationale as the batch
+        # twin's checkpoints)
         context = retrieved.unionByName(
             enhanced.filter(F.col("source") == "graph_expansion").select(
                 "chunk_id", F.lit("graph_expansion").alias("source"),

@@ -11,8 +11,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+from py4j.protocol import Py4JError
 from pyspark import Broadcast
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import _parse_datatype_string
 
 
 def _host_heap() -> str:
@@ -97,32 +101,86 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     return df
 
 
-# Driver-side serving state built once from an input table (the graph
-# adjacency and importance maps, the broadcast embedding matrix) and
-# reused while the table stays the same. The key is the frame's semantic
-# plan hash plus its input files: a filtered view of the same files has
+def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame of driver-side rows (``schema``: a StructType or DDL
+    string), built from an Arrow table. ``createDataFrame`` of a Python
+    list parallelizes pickled rows, so every action over such a frame
+    starts Python workers to unpickle them (1-3 s per action, measured
+    on a 4-core host); an Arrow table becomes a JVM-side LocalRelation.
+    NaN and null stay distinct."""
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    rows = list(rows)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
+# Driver-side serving state built once from input tables (the graph
+# adjacency and importance maps, the embedding matrix, the hybrid
+# retrieval index, the J1 chunk-similarity edges) and reused while the
+# tables stay the same. The key is each frame's semantic plan hash plus
+# the files its plan reads: a filtered view of the same files has
 # another plan, and a rewritten table other part-file names, so neither
-# can hit the other's entry. One entry per tag; a broadcast it replaces
-# is unpersisted, not destroyed, because lazy frames built on it may
-# still run. Frames without a stable file listing (in-memory frames)
-# rebuild per call.
+# can hit the other's entry. The files come from the ANALYZED plan's
+# file-relation leaves; ``df.inputFiles()`` reads the optimized plan,
+# which for a persisted frame is an InMemoryRelation with no files.
+# One entry per tag; the value it replaces is released (``_release``).
+# Frames whose plan reads no files (in-memory frames) rebuild per call.
 DRIVER_CACHE: dict[object, tuple] = {}
 
 
-def driver_cached(df, tag, build):
-    """``build()``, cached under ``tag`` for this frame's plan and files."""
+def source_files(df) -> tuple[str, ...]:
+    """Sorted files of the file-relation leaves of ``df``'s analyzed
+    plan; () when it reads none (or the plan cannot be inspected)."""
     try:
-        files = tuple(sorted(df.inputFiles()))
-    except Exception:
-        files = ()
-    if not files:
-        return build()
-    key = (df.semanticHash(), files)
+        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+        files: set[str] = set()
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "LogicalRelation":
+                rel = leaf.relation()
+                if rel.getClass().getSimpleName() == "HadoopFsRelation":
+                    files.update(rel.inputFiles())
+        return tuple(sorted(files))
+    except Py4JError:
+        return ()
+
+
+def _release(value) -> None:
+    """Free what a replaced cache value holds on the cluster. A
+    broadcast is unpersisted, never destroyed: lazy frames built on it
+    may still run and re-fetch it. A DataFrame is unpersisted, and when
+    it is a local checkpoint its checkpoint blocks are dropped too —
+    frames built on a replaced checkpoint can no longer run."""
+    if isinstance(value, Broadcast):
+        value.unpersist()
+    elif isinstance(value, DataFrame):
+        value.unpersist()
+        plan = value._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+
+
+def driver_cached(frames, tag, build):
+    """``build()``, cached under ``tag`` for the plans and files of
+    ``frames`` (one DataFrame or a tuple of them)."""
+    frames = frames if isinstance(frames, tuple) else (frames,)
+    key = []
+    for df in frames:
+        files = source_files(df)
+        if not files:
+            return build()
+        key.append((df.semanticHash(), files))
+    key = tuple(key)
     old = DRIVER_CACHE.get(tag)
     if old is not None and old[0] == key:
         return old[1]
     value = build()
-    if old is not None and isinstance(old[1], Broadcast):
-        old[1].unpersist()
+    if old is not None:
+        _release(old[1])
     DRIVER_CACHE[tag] = (key, value)
     return value

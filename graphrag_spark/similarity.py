@@ -58,6 +58,30 @@ def cosine_col(a: Column, b: Column) -> Column:
     return dot_col(a, b) / (norm_col(a) * norm_col(b))
 
 
+def query_norm(q: np.ndarray) -> float:
+    """``norm_col`` of a query vector, folded element by element."""
+    acc = 0.0
+    for x in q:
+        acc += x * x
+    return float(np.sqrt(acc))
+
+
+def query_cosine(
+    M: np.ndarray, q: np.ndarray, nq: float, norms: np.ndarray | None = None
+) -> np.ndarray:
+    """Unrounded ``cosine_col`` of every row of ``M`` against the query
+    ``q`` (norm ``nq``; row norms ``norms``, folded here when not
+    given): the dot folds sequentially over dims like ``dot_col``, so
+    the values equal Spark's bit for bit."""
+    if norms is None:
+        norms = np.sqrt(_fold_dot(M, M))
+    acc = np.zeros(len(M), dtype=np.float64)
+    for d in range(M.shape[1]):
+        acc += M[:, d] * q[d]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return acc / (norms * nq)
+
+
 def cosine_topk_query(
     embeddings: DataFrame,
     query_vec: list[float],
@@ -76,10 +100,7 @@ def cosine_topk_query(
     preserves nulls as nulls (a NaN stand-in would sort ABOVE real
     scores under Spark's NaN-greatest ordering)."""
     q = np.asarray(query_vec, dtype=np.float64)
-    nq_acc = 0.0
-    for x in q:  # norm_col's fold, element by element
-        nq_acc += x * x
-    nq = float(np.sqrt(nq_acc))
+    nq = query_norm(q)
 
     out_schema = T.StructType(
         [embeddings.schema[id_col], T.StructField("_raw_sim", T.DoubleType())]
@@ -96,12 +117,7 @@ def cosine_topk_query(
             mask = np.array([v is not None and len(v) == dim for v in vecs])
             if mask.any():
                 M = np.stack(vecs[mask]).astype(np.float64)
-                na = np.sqrt(_fold_dot(M, M))
-                acc = np.zeros(len(M), dtype=np.float64)
-                for d in range(M.shape[1]):
-                    acc += M[:, d] * q[d]
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    raw[mask] = acc / (na * nq)
+                raw[mask] = query_cosine(M, q, nq)
             yield pd.DataFrame({id_col: pdf[id_col], "_raw_sim": raw})
 
     scored = (
@@ -387,22 +403,41 @@ def _fits_broadcast(df: DataFrame) -> bool:
         return False
 
 
+def embedding_matrix(
+    embeddings: DataFrame, id_col: str, vec_col: str, max_rows: int | None = None
+):
+    """(ids, matrix, norms) of an embedding table on the driver, sorted
+    by id; norms use ``norm_col``'s fold. Collected through Arrow (guide
+    §6): collect() row-boxes every vector element, toPandas lands numpy
+    blocks directly. With ``max_rows`` the collect is LIMIT-guarded and
+    the result is None past it, or when a vector is null or the vectors
+    differ in length."""
+    df = embeddings.select(id_col, vec_col)
+    if max_rows is not None:
+        df = df.limit(max_rows + 1)
+    pdf = df.toPandas()
+    vecs = pdf[vec_col].to_numpy()
+    if max_rows is not None and (
+        len(pdf) > max_rows or any(v is None for v in vecs) or len({len(v) for v in vecs}) > 1
+    ):
+        return None
+    ids = pdf[id_col].to_numpy()
+    M = np.stack(vecs).astype(np.float64) if len(vecs) else np.zeros((0, 0))
+    nrm = np.sqrt(_fold_dot(M, M))  # same fold as norm_col, once per row
+    order = np.argsort(ids, kind="stable")
+    return ids[order], M[order], nrm[order]
+
+
 def _matrix_broadcast(embeddings: DataFrame, id_col: str, vec_col: str):
-    """Broadcast (ids, matrix, norms) of the embedding table for the
+    """Broadcast ``embedding_matrix`` of the embedding table for the
     numpy verify path, built once per table (``session.driver_cached``:
     the INPUT-side index is reused across verify calls; query results
     are never cached)."""
     from .session import driver_cached
 
     def build():
-        # Arrow driver transfer (guide §6): collect() row-boxes every
-        # vector element; toPandas lands numpy blocks directly
-        pdf_e = embeddings.select(id_col, vec_col).toPandas()
-        ids = pdf_e[id_col].to_numpy()
-        M = np.stack(pdf_e[vec_col].to_numpy()).astype(np.float64)
-        nrm = np.sqrt(_fold_dot(M, M))  # same fold as norm_col, once per row
-        order = np.argsort(ids, kind="stable")
-        return embeddings.sparkSession.sparkContext.broadcast((ids[order], M[order], nrm[order]))
+        mat = embedding_matrix(embeddings, id_col, vec_col)
+        return embeddings.sparkSession.sparkContext.broadcast(mat)
 
     return driver_cached(embeddings, ("matrix", id_col, vec_col), build)
 

@@ -625,9 +625,10 @@ def test_driver_cache_keys_on_plan(spark, tmp_path):
 
 
 def test_driver_cache_unpersists_replaced_broadcast(spark, tmp_path):
-    """One entry per tag: a new key replaces the entry and unpersists
-    the broadcast it held (never destroys it — lazy frames may still
-    read it)."""
+    """One entry per tag: a new key replaces the entry and releases the
+    value it held. A broadcast is unpersisted, never destroyed (lazy
+    frames may still read it); a persisted DataFrame is unpersisted; a
+    local checkpoint loses its blocks."""
     from pyspark import Broadcast
 
     from graphrag_spark.session import driver_cached
@@ -647,6 +648,125 @@ def test_driver_cache_unpersists_replaced_broadcast(spark, tmp_path):
     second = driver_cached(t.filter("id > 0"), "probe", Probe)
     DRIVER_CACHE.pop("probe")
     assert second is not first and first.unpersisted and not second.unpersisted
+
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cached = spark.range(4).persist()
+    cached.count()
+    assert driver_cached(t, "frame", lambda: cached) is cached
+    ck = spark.range(5).localCheckpoint(eager=True)
+    ck_rdd = ck._jdf.queryExecution().analyzed().rdd().id()
+    assert driver_cached(t.filter("id > 0"), "frame", lambda: ck) is ck
+    level = cached.storageLevel
+    assert not (level.useMemory or level.useDisk)
+    assert ck_rdd in persistent_rdds()
+    driver_cached(t, "frame", lambda: None)
+    DRIVER_CACHE.pop("frame")
+    assert ck_rdd not in persistent_rdds()
+
+
+def test_driver_cache_hits_persisted_table(spark, tmp_path):
+    """A frame persisted before its first action keys on the files of its
+    analyzed plan, so the second call hits; a rewrite of the files
+    misses. (``inputFiles()`` reads the optimized plan, an
+    InMemoryRelation with no files, so such a frame used to rebuild on
+    every call.)"""
+    from graphrag_spark.session import driver_cached
+
+    builds = []
+
+    def build():
+        builds.append(object())
+        return builds[-1]
+
+    path = str(tmp_path / "t")
+    spark.range(3).write.parquet(path)
+    t = spark.read.parquet(path).persist()
+    first = driver_cached(t, "probe", build)
+    t.count()
+    hit = driver_cached(t, "probe", build)
+    spark.range(5).write.mode("overwrite").parquet(path)
+    t2 = spark.read.parquet(path).persist()
+    rewritten = driver_cached(t2, "probe", build)
+    DRIVER_CACHE.pop("probe", None)
+    t.unpersist()
+    t2.unpersist()
+    assert hit is first
+    assert rewritten is not first and len(builds) == 2
+
+
+def test_j1_edges_built_once_per_chunks_table(kg):
+    """The J1 edge set is cached per chunks table as a local checkpoint:
+    a caller that persists and unpersists the frame it got (the traced
+    benchmark chain does) cannot evict it."""
+    e1 = graph_query.chunk_similarity_edges_for(kg["chunks"])
+    e1.persist()
+    n = e1.count()
+    e1.unpersist()
+    e2 = graph_query.chunk_similarity_edges_for(kg["chunks"])
+    assert e2 is e1 and e2.count() == n > 0
+
+
+def test_round6_matches_spark_round(spark):
+    """``_round6`` (the driver twin of ``F.round(x, 6)``) equals Spark's
+    round bit for bit, on both Spark evaluation paths (folded on the
+    driver over a local relation, and generated code in tasks): random
+    doubles, decimal ties at the 7th digit and their float neighbours,
+    large and tiny magnitudes, signed zeros, NaN, infinities and null."""
+    import math
+
+    import numpy as np
+
+    from graphrag_spark.session import literal_frame
+
+    rng = np.random.RandomState(7)
+    ties = [(k + 0.5) / 1e6 for k in rng.randint(-(10**6), 10**6, 2000)]
+    vals = (
+        list(rng.uniform(-1, 1, 3000))
+        + ties
+        + [np.nextafter(x, 2.0) for x in ties]
+        + [np.nextafter(x, -2.0) for x in ties]
+        + list(rng.uniform(-1e9, 1e9, 500))
+        + list(10.0 ** rng.uniform(-12, 12, 500))
+        + [0.0, -0.0, 5e-7, -5e-7, 2.5e-7, 1e-7, 0.5, 1.0, 1e300, 5e-324, 8.41e21,
+           2.82879384806159e17, math.inf, -math.inf, math.nan]
+    )
+    rows = [(i, float(v)) for i, v in enumerate(vals)] + [(len(vals), None)]
+    df = literal_frame(spark, rows, "i int, x double")
+    want = [repr(graph_query._round6(x)) for _i, x in rows]
+    for frame in (df, df.repartition(4)):
+        got = {r["i"]: repr(r["r"]) for r in frame.select("i", F.round("x", 6).alias("r")).collect()}
+        assert [got[i] for i, _x in rows] == want
+
+
+def test_hybrid_driver_route_equals_dataframe_route(kg, monkeypatch):
+    """Under the cap ``hybrid_retrieval`` runs on the driver index;
+    forced over it (cap 0) the DataFrame body runs. Both give the same
+    rows in the same order for an analytical query (with a path side),
+    a comparative and a factual one."""
+    args = (kg["chunks"], kg["nodes"], kg["mentions"], kg["triples"])
+    queries = (
+        "explain the relationship between the partnership and the rollout",
+        "compare partnership versus rollout",
+        "what is partnership",
+    )
+
+    def run():
+        return [
+            [tuple(r) for r in graph_query.hybrid_retrieval(*args, q, top_k=10).collect()]
+            for q in queries
+        ]
+
+    DRIVER_CACHE.clear()
+    driver = run()
+    assert graph_query._driver_retrieval_index(kg["chunks"], kg["nodes"], kg["mentions"])
+    monkeypatch.setattr(graph_query, "_DRIVER_BEAM_MAX_ROWS", 0)
+    DRIVER_CACHE.clear()
+    over_cap = run()
+    DRIVER_CACHE.clear()
+    assert all(driver) and driver == over_cap
+    assert {r[1] for r in driver[0]} & {"path_based", "hybrid_with_paths"}
 
 
 def test_decay_driver_fast_path_equals_distributed(kg, monkeypatch):
