@@ -52,6 +52,8 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from .session import literal_frame
+
 CC_SALT_BUCKETS = 16
 MAX_ITERATIONS = 25
 
@@ -149,7 +151,7 @@ def connected_components(
         head = e.limit(driver_max_edges + 1).collect()
         if len(head) <= driver_max_edges:
             labels = _union_find_labels([(r[0], r[1]) for r in head])
-            return spark.createDataFrame(labels, label_schema)
+            return literal_frame(spark, labels, label_schema)
         e = e.localCheckpoint(eager=True)  # the big path reuses the scan
     else:
         e = e.localCheckpoint(eager=True)

@@ -22,7 +22,9 @@ Spark-side: ``chunk_documents`` runs the splitter as an Arrow-vectorized
 ``mapInPandas`` (one Python roundtrip per batch of documents, never per
 row), and ``with_quality`` computes the reference's chunk-quality score
 (core/ocr.py:162-298) with *native* Spark expressions only — it stays
-inside WholeStageCodegen.
+inside WholeStageCodegen. ``embedded_chunks`` is the pipeline's chunks
+stage: the same split plus the chunk embedding in one Python pass,
+scored by ``with_quality``.
 """
 
 from __future__ import annotations
@@ -153,27 +155,53 @@ CHUNK_SCHEMA = T.StructType(
 )
 
 
+def _chunk_rows(pdf: pd.DataFrame, chunk_size: int, overlap: int) -> pd.DataFrame:
+    """One batch of (doc_id, content) documents -> its CHUNK_SCHEMA rows."""
+    rows = []
+    for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
+        pairs = split_with_offsets(content or "", chunk_size, overlap)
+        n = len(pairs)
+        for i, (c, off) in enumerate(pairs):
+            rows.append((doc_id, f"{doc_id}_chunk_{i}", i, c, off, len(c), n))
+    return pd.DataFrame(rows, columns=CHUNK_SCHEMA.fieldNames())
+
+
 def chunk_documents(doc_text_df: DataFrame, chunk_size: int = CHUNK_SIZE, overlap: int = CHUNK_OVERLAP) -> DataFrame:
     """(doc_id, content) -> chunk rows via Arrow-batched mapInPandas."""
     from .session import ensure_parallelism
 
-    doc_text_df = ensure_parallelism(doc_text_df)
-    cols = ["doc_id", "content"]
+    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield _chunk_rows(pdf, chunk_size, overlap)
+
+    return ensure_parallelism(doc_text_df).select("doc_id", "content").mapInPandas(gen, schema=CHUNK_SCHEMA)
+
+
+def embedded_chunks(doc_text_df: DataFrame, chunk_size: int = CHUNK_SIZE, overlap: int = CHUNK_OVERLAP) -> DataFrame:
+    """(doc_id, content) -> quality-scored chunk rows with their
+    ``embedding``, split and embedded in ONE Arrow pass: the chunk text
+    crosses the Python boundary once per batch. ``embed_texts_np`` is
+    deterministic and independent of the batch, so every vector equals
+    what ``embeddings.embed_chunks`` gives the same chunk."""
+    from .embeddings import EMBED_DIM, embed_texts_np
+    from .session import ensure_parallelism
+
+    schema = T.StructType(
+        CHUNK_SCHEMA.fields + [T.StructField("embedding", T.ArrayType(T.DoubleType()))]
+    )
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                pairs = split_with_offsets(content or "", chunk_size, overlap)
-                n = len(pairs)
-                for i, (c, off) in enumerate(pairs):
-                    rows.append((doc_id, f"{doc_id}_chunk_{i}", i, c, off, len(c), n))
-            yield pd.DataFrame(
-                rows,
-                columns=["doc_id", "chunk_id", "chunk_index", "content", "offset", "chunk_size", "total_chunks"],
-            )
+            out = _chunk_rows(pdf, chunk_size, overlap)
+            out["embedding"] = [v.tolist() for v in embed_texts_np(list(out["content"]), EMBED_DIM)]
+            yield out
 
-    return doc_text_df.select(*cols).mapInPandas(gen, schema=CHUNK_SCHEMA)
+    chunks = ensure_parallelism(doc_text_df).select("doc_id", "content").mapInPandas(gen, schema=schema)
+    out = with_quality(chunks)
+    # chunk_id first and the vector last: the column order of the
+    # committed chunks table
+    cols = [c for c in out.columns if c not in ("chunk_id", "embedding")]
+    return out.select("chunk_id", *cols, "embedding")
 
 
 # ---------------------------------------------------------------------------

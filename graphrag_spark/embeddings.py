@@ -9,6 +9,14 @@ batching, and dedup-before-compute shape a real model UDF would have
 (the reference's cache is replaced by ``dropDuplicates`` on the text
 before the UDF, SURVEY.md §2.9).
 
+The content dedup applies only to ``embed_chunks`` callers
+(``graph_ops``) and to ``repair_embeddings``. The pipeline's chunks
+stage embeds inside the chunker's own Arrow pass
+(``chunking.embedded_chunks``) with no dedup: the encoder is
+deterministic and independent of the batch, so a repeated text gets
+the same vector either way, and the dedup would cost two more chunker
+passes, a shuffle and two joins.
+
 Encoder: hash word 1-2-grams into ``dim`` buckets with +/- signs
 (sign hash), L2-normalize. Similar texts share n-grams -> high cosine;
 fully deterministic across processes (pandas keyed siphash).

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 import pyspark.sql.types as T
 from pyspark.sql import DataFrame
 
+from .session import literal_frame
 from .vocab import build_vocabulary
 
 # relationship co-occurrence window in characters (two mentions within
@@ -415,7 +416,8 @@ def _surface_payload_rows() -> list[tuple[str, str, float, str]]:
 
 def surface_payload_df(spark) -> DataFrame:
     """Broadcastable vocabulary payload table (one row per surface)."""
-    return spark.createDataFrame(
+    return literal_frame(
+        spark,
         _surface_payload_rows(),
         "name string, type_or_target string, score double, description string",
     )

@@ -23,6 +23,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from .normalize import py_norm_name, py_norm_type
+from .session import literal_frame
 from .vocab import aliases_as_rows
 
 SALT_BUCKETS = 16
@@ -82,7 +83,7 @@ def alias_dictionary(spark: SparkSession) -> DataFrame:
         (py_norm_name(alias).lower(), canonical, py_norm_type(etype), float(prior))
         for alias, canonical, etype, prior in aliases_as_rows()
     ]
-    df = spark.createDataFrame(rows, "alias_key string, canonical_name string, entity_type string, prior double")
+    df = literal_frame(spark, rows, "alias_key string, canonical_name string, entity_type string, prior double")
     return df.groupBy("alias_key").agg(
         F.max_by("canonical_name", F.struct(F.col("prior"), F.col("canonical_name"))).alias("canonical_name"),
         F.max_by("entity_type", F.struct(F.col("prior"), F.col("entity_type"))).alias("canonical_type"),

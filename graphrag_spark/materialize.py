@@ -19,6 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from .canonicalize import connected_components
+from .session import literal_frame
 
 
 def canonical_map(linked: DataFrame) -> DataFrame:
@@ -230,7 +231,8 @@ def build_triples_from_occurrences(occ: DataFrame, smap: DataFrame, cmap: DataFr
         for r in smap.select("name", F.lower("norm_name").alias("name_key")).collect()
     )
     composed = [(name, canon) for name, key in surfaces for canon in canons.get(key, ())]
-    m = occ.sparkSession.createDataFrame(
+    m = literal_frame(
+        occ.sparkSession,
         [(name, sid, canon) for sid, (name, canon) in enumerate(composed)],
         "name string, sid int, canon string",
     )

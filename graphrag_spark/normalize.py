@@ -39,6 +39,7 @@ from itertools import chain
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from .session import literal_frame
 from .vocab import CANONICAL_TYPES, TYPE_ALIASES
 
 # -- name normalization ------------------------------------------------------
@@ -217,7 +218,7 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
         )
         df._graphrag_materialized = False  # type: ignore[attr-defined]
         return df
-    out = df.sparkSession.createDataFrame(rows, df.schema)
+    out = literal_frame(df.sparkSession, rows, df.schema)
     out._graphrag_materialized = True  # type: ignore[attr-defined]
     return out
 
@@ -274,7 +275,8 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     if "type_or_target" not in mentions_raw.columns:
         from .extraction import _surface_payload_rows
 
-        pairs = mentions_raw.sparkSession.createDataFrame(
+        pairs = literal_frame(
+            mentions_raw.sparkSession,
             [(name, etype) for name, etype, _score, _desc in _surface_payload_rows()],
             "name string, type_or_target string",
         )

@@ -171,15 +171,15 @@ class KGRun:
 
 
 def _chunks(run: KGRun) -> DataFrame:
-    from .embeddings import embed_chunks
-
     # chunk rows carry their embedding like the reference's chunk nodes
-    # (core/graph_db.py:174-203); the in-memory extractor reads the
-    # narrow base columns, and the checkpointed one is protected by
-    # parquet column pruning, so the vector never rides through its
-    # shuffle
-    base = run.chunks_base
-    return base.join(embed_chunks(base).select("chunk_id", "embedding"), "chunk_id")
+    # (core/graph_db.py:174-203). Split and embed share one Python pass
+    # and the quality columns are native, so the stage is one
+    # MapInPandas with no exchange: no content dedup before the
+    # embedder, whose vectors do not depend on the batch. The in-memory
+    # custom extractor reads the narrow ``chunks_base`` instead, and the
+    # checkpointed one is protected by parquet column pruning, so the
+    # vector never rides through its shuffle.
+    return chunking.embedded_chunks(document_text(run.docs), run.chunk_size, run.overlap)
 
 
 def _extracted(run: KGRun) -> DataFrame:
@@ -348,9 +348,9 @@ class KGPipeline:
             return {}
         return {r["stage"]: r["stage_hash"] for r in rows}
 
-    def _commit(self, stage: str, stage_hash: str, doc_col: str | None, table: str | None) -> None:
-        """Append per-partition lineage rows for a just-written stage."""
-        out = self._read_stage(self._path(stage), table)
+    def _commit(self, stage: str, stage_hash: str, doc_col: str | None, out: DataFrame) -> None:
+        """Append per-partition lineage rows for a just-written stage,
+        ``out`` being its read-back."""
         if doc_col is not None and doc_col in out.columns:
             stats = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
                 F.min(doc_col).alias("doc_id_min"),
@@ -388,9 +388,10 @@ class KGPipeline:
             buckets=self.buckets if stage.bucket_col else None,
             bucket_col=stage.bucket_col, iceberg_table=table,
         )
-        self._commit(stage.name, h, stage.doc_col, table)
+        out = self._read_stage(path, table)
+        self._commit(stage.name, h, stage.doc_col, out)
         self.stage_times[stage.name] = time.time() - t0
-        return self._read_stage(path, table)
+        return out
 
     def _read_stage(self, path: str, table: str | None) -> DataFrame:
         if table is not None:

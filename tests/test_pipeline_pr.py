@@ -130,6 +130,33 @@ def test_in_memory_equals_checkpointed(kg_out, pipeline_out):
         assert want and rows(out[stage], cols) == want, stage
 
 
+def test_chunks_stage_equals_composition(pipeline_out, spark, corpus_path):
+    """The one-pass chunks stage commits exactly what the chunker, the
+    native quality columns and the deduplicating ``embed_chunks`` give
+    composed: same column order, same rows, bit-equal embeddings. Its
+    executed plan has one Python node."""
+    from graphrag_spark import chunking
+    from graphrag_spark.corpus import document_text
+    from graphrag_spark.embeddings import embed_chunks
+    from graphrag_spark.pipeline import KGRun, _chunks
+
+    _, out, _ = pipeline_out
+    docs = spark.read.parquet(corpus_path)
+    base = chunking.with_quality(chunking.chunk_documents(document_text(docs)))
+    want = base.join(embed_chunks(base).select("chunk_id", "embedding"), "chunk_id")
+
+    def rows(df):
+        return Counter(
+            tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect()
+        )
+
+    assert out["chunks"].columns == want.columns
+    expected = rows(want)
+    assert expected and rows(out["chunks"]) == expected
+    stage = _chunks(KGRun(spark, docs, in_memory=False))
+    assert stage._jdf.queryExecution().executedPlan().toString().count("MapInPandas") == 1
+
+
 def test_resume_param_revert_recomputes(spark, corpus_path, tmp_path_factory):
     """Append-only lineage holds BOTH hashes after a stage is recomputed
     under different params. Reverting params must NOT hash-match the
