@@ -21,6 +21,10 @@ from pyspark.sql import DataFrame, Window
 
 PREVIEW_CHARS = 200  # generation.py:102: content[:200] + "..."
 MAX_SOURCE_ENTITIES = 3  # generation.py:93: entities[:3]
+SOURCES_SCHEMA = (
+    "kind string, chunk_id string, entity_name string, entity_id string, relevance double, "
+    "content string, contained_entities string, entity_enhanced boolean"
+)
 
 
 def prepare_sources(
@@ -126,6 +130,55 @@ def response_metadata(retrieved: DataFrame, analysis: dict) -> dict:
     n = retrieved.filter(F.col("score") > 0.0).count()
     return {
         "chunks_used": n,
+        "query_type": analysis.get("query_type", "factual"),
+        "complexity": analysis.get("complexity", "simple"),
+        "multi_hop_recommended": bool(analysis.get("multi_hop_recommended", False)),
+    }
+
+
+def _positive(score) -> bool:
+    """Spark's ``score > 0.0``: null is false and NaN, which Spark orders
+    above every number, is true."""
+    return score is not None and (score != score or score > 0.0)
+
+
+def driver_sources(
+    context: list,
+    content: dict,
+    entities: dict,
+    max_entities: int = MAX_SOURCE_ENTITIES,
+) -> list:
+    """``prepare_sources``' rows (unkeyed, same column order) from driver
+    state: ``context`` holds (chunk_id, source, score) rows, ``content``
+    maps chunk_id -> content (rows for other chunks are dropped, like
+    the inner join) and ``entities`` maps chunk_id -> its mention rows
+    (entity_id, name, importance) in rank order, duplicates kept. Same
+    rows as the DataFrame body (pytest-asserted)."""
+    ent_rows, chunk_rows = [], []
+    for cid, source, score in context:
+        if not _positive(score) or cid not in content:
+            continue
+        text = content[cid]
+        ents = entities.get(cid)
+        # array_join skips null names
+        csv = ",".join(n for _e, n, _i in ents if n is not None) if ents else None
+        if source == "entity_based" and csv is not None:
+            preview = None if text is None else text[:PREVIEW_CHARS] + "..."
+            ent_rows += [
+                ("entity", cid, n, e, score, preview, csv, True)
+                for e, n, _i in ents[:max_entities]
+            ]
+        # Spark's (source != 'entity_based') OR csv IS NULL, null source
+        # included
+        elif csv is None or source is not None:
+            chunk_rows.append(("chunk", cid, None, None, score, text, csv or "", bool(csv)))
+    return ent_rows + chunk_rows
+
+
+def driver_response_metadata(context: list, analysis: dict) -> dict:
+    """``response_metadata`` over (chunk_id, source, score) rows."""
+    return {
+        "chunks_used": sum(_positive(r[2]) for r in context),
         "query_type": analysis.get("query_type", "factual"),
         "complexity": analysis.get("complexity", "simple"),
         "multi_hop_recommended": bool(analysis.get("multi_hop_recommended", False)),

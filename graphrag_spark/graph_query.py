@@ -21,10 +21,15 @@ Serving state lives on the driver, one ``session.driver_cached`` entry
 per input table set, reused while the tables stay the same: the walks'
 adjacency and importance maps, the J1 chunk-similarity edges (a local
 checkpoint, ``chunk_similarity_edges_for``) and the hybrid-retrieval
-index (chunk matrix, mention lists, entity embeddings). Under the cap
-``hybrid_retrieval`` runs in numpy/Python over that index and returns
-literal rows (``_driver_hybrid``; ``_round6`` is its ``F.round``);
-past it the DataFrame body runs. Literal rows become frames through
+index (chunk matrix, mention lists, entity embeddings), plus the
+serving state of ``graph_rag_query``'s reasoning and sources nodes
+(``serving_state``: the J1 edges as an adjacency, chunk documents and
+contents, ranked mention rows; bounded by rows and by the broadcast
+threshold in bytes). Under the cap ``hybrid_retrieval`` runs in
+numpy/Python over that index and returns literal rows
+(``_driver_hybrid``; ``_round6`` is its ``F.round``), and
+``driver_reasoning`` gives ``graph_reasoning_enhance``'s rows; past it
+the DataFrame bodies run. Literal rows become frames through
 Arrow (``session.literal_frame``), never a pickled Python RDD.
 """
 
@@ -38,7 +43,7 @@ import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .session import driver_cached, literal_frame
+from .session import broadcast_threshold, driver_cached, literal_frame
 
 DISTANCE_DECAY = {1: 0.3, 2: 0.2}  # reference core/graph_db.py:516-557
 DEFAULT_DECAY = 0.15
@@ -839,7 +844,7 @@ class _RetrievalIndex(NamedTuple):
     matrix: np.ndarray  # chunk embeddings, float64, row i = ids[i]
     norms: np.ndarray  # norm_col fold of each row
     row: dict  # chunk_id -> row of matrix
-    by_chunk: dict  # chunk_id -> [(name, importance)], one per mentions x nodes row
+    by_chunk: dict  # chunk_id -> [(entity_id, name, importance)], one per mentions x nodes row
     by_name: dict  # name -> {chunk_id}, the same rows inverted
     emb: dict  # name -> [node embedding as float64], non-null embeddings only
 
@@ -859,7 +864,7 @@ def _driver_retrieval_index(chunks: DataFrame, nodes: DataFrame, mentions: DataF
             return None
         ment = (
             mentions.join(nodes.select("entity_id", "name", "importance"), "entity_id")
-            .select("chunk_id", "name", "importance")
+            .select("chunk_id", "entity_id", "name", "importance")
             .limit(cap + 1)
             .collect()
         )
@@ -868,8 +873,8 @@ def _driver_retrieval_index(chunks: DataFrame, nodes: DataFrame, mentions: DataF
             return None
         by_chunk: dict[str, list] = {}
         by_name: dict[str, set] = {}
-        for c, n, imp in ment:
-            by_chunk.setdefault(c, []).append((n, imp))
+        for c, e, n, imp in ment:
+            by_chunk.setdefault(c, []).append((e, n, imp))
             by_name.setdefault(n, set()).add(c)
         emb: dict[str, list] = {}
         for n, v in embs:
@@ -1006,7 +1011,7 @@ def _driver_hybrid(index, triples, nodes, qvec, split, top_k, expansion_threshol
 
     seed_imp: dict[str, float] = {}
     for c, _s in ranked[:10]:
-        for n, imp in index.by_chunk.get(c, ()):
+        for _e, n, imp in index.by_chunk.get(c, ()):
             seed_imp[n] = _max(seed_imp.get(n), imp)
     seeds = [n for n, _ in _top(seed_imp, 5)]
 
@@ -2311,6 +2316,68 @@ def chunk_similarity_edges_for(chunks: DataFrame) -> DataFrame:
     )
 
 
+class _ServingState(NamedTuple):
+    """Driver copy of what ``graph_rag_query``'s reasoning and sources
+    nodes read from one (chunks, nodes, mentions) table set."""
+
+    adj: dict  # chunk_id -> [(chunk_id, similarity)], the J1 edges both ways
+    doc_of: dict  # chunk_id -> doc_id
+    doc_chunks: dict  # doc_id -> [chunk_id]
+    content: dict  # chunk_id -> content
+    entities: dict  # chunk_id -> [(entity_id, name, importance)], (importance DESC, name) order
+
+
+def _serving_state(chunks: DataFrame, index: _RetrievalIndex, sim_edges: DataFrame):
+    """The ``_ServingState`` over ``index``'s mention rows and the
+    (src, dst, similarity) edges ``sim_edges``, or None when chunks or
+    edges are over ``_DRIVER_BEAM_MAX_ROWS`` rows (LIMIT-guarded
+    collects), a chunk id is null or repeated, or the UTF-8 bytes of the
+    content or of the edge rows exceed the session's broadcast
+    threshold."""
+    cap = _DRIVER_BEAM_MAX_ROWS
+    rows = chunks.select("chunk_id", "doc_id", "content").limit(cap + 1).collect()
+    edges = sim_edges.select("src", "dst", "similarity").limit(cap + 1).collect()
+    if len(rows) > cap or len(edges) > cap:
+        return None
+    ids = {r[0] for r in rows}
+    if None in ids or len(ids) < len(rows):
+        return None
+    content_bytes = sum(len(r[2].encode()) for r in rows if r[2] is not None)
+    edge_bytes = sum(len(a.encode()) + len(b.encode()) + 8 for a, b, _s in edges)
+    if max(content_bytes, edge_bytes) > broadcast_threshold(chunks.sparkSession):
+        return None
+    adj: dict[str, list] = {}
+    for a, b, s in edges:
+        adj.setdefault(a, []).append((b, s))
+        adj.setdefault(b, []).append((a, s))
+    doc_chunks: dict[str, list] = {}
+    for c, d, _t in rows:
+        if d is not None:
+            doc_chunks.setdefault(d, []).append(c)
+    entities = {
+        c: sorted(es, key=lambda e: (_desc_key(e[2]), e[1] is not None, e[1] or ""))
+        for c, es in index.by_chunk.items()
+    }
+    return _ServingState(
+        adj, {r[0]: r[1] for r in rows}, doc_chunks, {r[0]: r[2] for r in rows}, entities
+    )
+
+
+def serving_state(chunks: DataFrame, nodes: DataFrame, mentions: DataFrame):
+    """The cached ``_ServingState`` of a table set (one
+    ``session.driver_cached`` entry, filled on the first request), or
+    None when the retrieval index or the state declines: the caller then
+    runs the DataFrame bodies."""
+
+    def build():
+        index = _driver_retrieval_index(chunks, nodes, mentions)
+        if index is None:
+            return None
+        return _serving_state(chunks, index, chunk_similarity_edges_for(chunks))
+
+    return driver_cached((chunks, nodes, mentions), "serving_state", build)
+
+
 def top_entities(nodes: DataFrame, k: int = 10) -> DataFrame:
     """T4 (core/graph_db.py:1051-1067)."""
     return nodes.orderBy(F.desc("importance"), "name").limit(k)
@@ -2449,6 +2516,41 @@ def graph_reasoning_enhance(
         F.lit(None).cast("double").alias("similarity"),
     )
     return base.unionByName(added)
+
+
+def driver_reasoning(state: _ServingState, retrieved: list, top_m: int = 3, cap: int = 10) -> list:
+    """``graph_reasoning_enhance``'s appended rows as context rows
+    (chunk_id, 'graph_expansion', similarity), from the serving state:
+    the top ``top_m`` of the (chunk_id, source, score) ``retrieved`` rows
+    in (score DESC, chunk_id) order expand with ``related_chunks``'
+    rules (edge score; 2-hop mean, rounded, never back to the seed; 0.2
+    for a same-document sibling), retrieved chunks are dropped, the
+    first occurrence of each chunk in (seed rank, distance, similarity
+    DESC, chunk_id) order is kept, up to ``cap - len(retrieved)`` rows.
+    Same rows as the DataFrame body (pytest-asserted)."""
+    budget = max(0, cap - len(retrieved))
+    if not budget:
+        return []
+    ranked = sorted(retrieved, key=lambda r: (_desc_key(r[2]), r[0]))
+    cands = set()
+    for rank, (seed, _src, _score) in enumerate(ranked[:top_m], 1):
+        for mid, s1 in state.adj.get(seed, ()):
+            cands.add((rank, 1, s1, mid))
+            for c, s2 in state.adj.get(mid, ()):
+                if c != seed:
+                    cands.add((rank, 2, _round6((s1 + s2) / 2.0), c))
+        for c in state.doc_chunks.get(state.doc_of.get(seed), ()):
+            if c != seed:
+                cands.add((rank, 2, 0.2, c))
+    seen = {r[0] for r in retrieved}
+    out = []
+    for _rank, _dist, sim, c in sorted(cands, key=lambda t: (t[0], t[1], _desc_key(t[2]), t[3])):
+        if c not in seen:
+            seen.add(c)
+            out.append((c, "graph_expansion", _round6(sim)))
+            if len(out) == budget:
+                break
+    return out
 
 
 def batch_graph_reasoning_enhance(

@@ -18,11 +18,17 @@ Node parity:
              (rag/nodes/generation.py:45-146); the answer text itself
              is the LLM boundary.
 
-Serving cost: the stored tables' driver state (graph adjacency, the J1
-edges, the hybrid-retrieval index) is built on the first request and
-reused while the same frames are passed, so under the driver cap a
-warm ``graph_rag_query`` spends its Spark jobs on the expansion
-branches, the reasoning checkpoint and the sources, not on retrieval.
+Serving cost: the stored tables' driver state (graph adjacency, the
+hybrid-retrieval index, and the serving state of the reasoning and
+sources nodes: the J1 edges, chunk documents and contents, ranked
+mention rows) is built on the first request and reused while the same
+frames are passed. Under the driver cap a warm ``graph_rag_query``
+runs its reasoning, sources and metadata nodes on the driver and
+returns literal frames, so a request whose retrieval also took the
+driver route runs no Spark job; only the graph-expansion branches of
+complex or comparative queries still do. Past the cap, or when the
+state declines (``graph_query.serving_state``), the DataFrame bodies
+run.
 """
 
 from __future__ import annotations
@@ -31,8 +37,17 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
 from . import graph_query
-from .generation import prepare_sources, response_metadata
+from .generation import (
+    SOURCES_SCHEMA,
+    driver_response_metadata,
+    driver_sources,
+    prepare_sources,
+    response_metadata,
+)
 from .query_analysis import py_analyze_query, py_detect_follow_up
+from .session import literal_frame
+
+CONTEXT_SCHEMA = "chunk_id string, source string, score double"
 
 
 def retrieve_documents(
@@ -69,6 +84,31 @@ def retrieve_documents(
     )
 
 
+def _reasoning_context(retrieved: DataFrame, sim_edges: DataFrame, chunks: DataFrame) -> DataFrame:
+    """The reasoning node's context over the DataFrame bodies: the
+    (chunk_id, source, score) ``retrieved`` rows plus the rows
+    ``graph_reasoning_enhance`` appends, scored by their traversal
+    similarity."""
+    ranked = retrieved.select(
+        "chunk_id",
+        F.row_number().over(
+            Window.orderBy(F.desc("score"), "chunk_id")
+        ).alias("rank"),
+    )
+    enhanced = graph_query.graph_reasoning_enhance(ranked, sim_edges, chunks)
+    # localCheckpoint: sources + metadata each re-execute the context
+    # plan (the J1 edges themselves are a cached checkpoint,
+    # chunk_similarity_edges_for), and lineage truncation keeps
+    # downstream plan trees bounded (same rationale as the batch twin's
+    # checkpoints)
+    return retrieved.unionByName(
+        enhanced.filter(F.col("source") == "graph_expansion").select(
+            "chunk_id", F.lit("graph_expansion").alias("source"),
+            F.col("similarity").alias("score"),
+        )
+    ).localCheckpoint(eager=True)
+
+
 def graph_rag_query(
     chunks: DataFrame,
     nodes: DataFrame,
@@ -91,7 +131,15 @@ def graph_rag_query(
     - 'sources': the generation node's source records;
     - 'metadata': chunks_used + analysis echo (generation.py:122-146);
     - 'stages': the stage names in execution order (graph_rag.py's
-      stage tracking)."""
+      stage tracking).
+
+    Route: when ``graph_query.serving_state`` holds the tables (under
+    ``_DRIVER_BEAM_MAX_ROWS`` and the byte bound), the retrieval rows
+    are collected once and reasoning, sources and metadata run on the
+    driver (``driver_reasoning``, ``driver_sources``); 'retrieved',
+    'context' and 'sources' are then literal frames and 'retrieved' is
+    not persisted. Otherwise 'retrieved' is persisted and the DataFrame
+    bodies run; both routes give the same rows (pytest-asserted)."""
     analysis = py_analyze_query(query_text)
     analysis.update(py_detect_follow_up(query_text))
 
@@ -99,37 +147,29 @@ def graph_rag_query(
         chunks, nodes, mentions, triples, query_text,
         retrieval_mode=retrieval_mode, top_k=top_k,
         graph_expansion=graph_expansion,
-    ).persist()
+    )
+    reason = retrieval_mode not in ("simple", "chunk_only")
 
-    if retrieval_mode in ("simple", "chunk_only"):
-        context = retrieved
+    state = graph_query.serving_state(chunks, nodes, mentions)
+    if state is not None:
+        spark = chunks.sparkSession
+        rows = [tuple(r) for r in retrieved.collect()]
+        ctx = rows + (graph_query.driver_reasoning(state, rows) if reason else [])
+        retrieved = literal_frame(spark, rows, CONTEXT_SCHEMA)
+        context = literal_frame(spark, ctx, CONTEXT_SCHEMA)
+        sources = literal_frame(
+            spark, driver_sources(ctx, state.content, state.entities), SOURCES_SCHEMA
+        )
+        meta = driver_response_metadata(ctx, analysis)
     else:
-        ranked = retrieved.select(
-            "chunk_id",
-            F.row_number().over(
-                Window.orderBy(F.desc("score"), "chunk_id")
-            ).alias("rank"),
+        retrieved = retrieved.persist()
+        context = (
+            _reasoning_context(retrieved, graph_query.chunk_similarity_edges_for(chunks), chunks)
+            if reason
+            else retrieved
         )
-        sim_edges = graph_query.chunk_similarity_edges_for(chunks)
-        enhanced = graph_query.graph_reasoning_enhance(
-            ranked, sim_edges, chunks
-        )
-        # enhancement keeps retrieval scores for the original rows and
-        # assigns expansion rows their traversal similarity
-        # localCheckpoint: sources + metadata each re-execute the
-        # context plan (the J1 edges themselves are a cached checkpoint,
-        # chunk_similarity_edges_for), and lineage truncation keeps
-        # downstream plan trees bounded (same rationale as the batch
-        # twin's checkpoints)
-        context = retrieved.unionByName(
-            enhanced.filter(F.col("source") == "graph_expansion").select(
-                "chunk_id", F.lit("graph_expansion").alias("source"),
-                F.col("similarity").alias("score"),
-            )
-        ).localCheckpoint(eager=True)
-
-    sources = prepare_sources(context, chunks, mentions, nodes)
-    meta = response_metadata(context, analysis)
+        sources = prepare_sources(context, chunks, mentions, nodes)
+        meta = response_metadata(context, analysis)
     return {
         "analysis": analysis,
         "retrieved": retrieved,

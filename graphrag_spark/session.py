@@ -101,6 +101,12 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     return df
 
 
+def broadcast_threshold(spark: SparkSession) -> int:
+    """The session's ``spark.sql.autoBroadcastJoinThreshold`` in bytes,
+    the size it ships to every executor; -1 when broadcasts are off."""
+    return int(spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+
+
 def literal_frame(spark: SparkSession, rows, schema) -> DataFrame:
     """A DataFrame of driver-side rows (``schema``: a StructType or DDL
     string), built from an Arrow table. ``createDataFrame`` of a Python

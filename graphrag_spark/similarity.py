@@ -393,8 +393,10 @@ def _fits_broadcast(df: DataFrame) -> bool:
     but unbounded in general (a hint on a genuinely large frame would
     OOM executors; without one the planner falls back to shuffle
     joins)."""
+    from .session import broadcast_threshold
+
     try:
-        thr = int(df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold())
+        thr = broadcast_threshold(df.sparkSession)
         if thr <= 0:
             return False
         size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))

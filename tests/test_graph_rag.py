@@ -465,3 +465,223 @@ def test_batch_graph_rag_query_matches_per_query(kg):
             ]
             want_bat = py_split_batches(text, ordered, 8192, 0)
             assert by_bat.get(qid, []) == want_bat, (mode, qid, "batches")
+
+
+def _multiset(rows):
+    """Rows as a multiset; NaN made equal to itself."""
+    from collections import Counter
+
+    return Counter(
+        tuple("NaN" if isinstance(v, float) and v != v else v for v in r) for r in rows
+    )
+
+
+def _is_literal(df) -> bool:
+    return df._jdf.queryExecution().analyzed().getClass().getSimpleName() == "LocalRelation"
+
+
+def test_driver_nodes_equal_dataframe_route(kg, monkeypatch):
+    """Under the cap ``graph_rag_query`` runs reasoning, sources and
+    metadata on the driver serving state and returns literal frames;
+    forced over it (cap 0) the DataFrame bodies run. Both give the same
+    retrieved, context and source rows (as multisets, same columns and
+    types) and the same metadata for an analytical, a comparative and a
+    factual query, and for a chunk_only one. The driver walk also equals
+    ``graph_reasoning_enhance`` with a wider cap."""
+    import pyspark.sql.functions as F
+    from pyspark.sql import Window
+
+    from graphrag_spark import graph_query
+    from graphrag_spark.graph_rag import CONTEXT_SCHEMA
+    from graphrag_spark.session import DRIVER_CACHE, literal_frame
+
+    calls = (
+        ("why does partnership depend on rollout", "graph_enhanced"),
+        ("compare partnership versus rollout", "graph_enhanced"),
+        ("what is partnership", "graph_enhanced"),
+        ("what is partnership", "chunk_only"),
+    )
+
+    def run():
+        out = []
+        for q, mode in calls:
+            got = graph_rag_query(*kg, q, retrieval_mode=mode, top_k=5)
+            out.append(
+                {
+                    k: (got[k].dtypes, _multiset(got[k].collect()))
+                    for k in ("retrieved", "context", "sources")
+                }
+                | {"metadata": got["metadata"], "literal": _is_literal(got["context"])}
+            )
+        return out
+
+    DRIVER_CACHE.clear()
+    driver = run()
+    state = graph_query.serving_state(*kg[:3])
+    assert state is not None
+    # past graph_rag_query's cap of 10 the walk reaches same-document
+    # siblings too, which the dense J1 edges of this corpus crowd out
+    rows = [tuple(r) for r in retrieve_documents(*kg, calls[0][0], top_k=5).collect()]
+    wide = graph_query.driver_reasoning(state, rows, cap=60)
+    ranked = literal_frame(kg[0].sparkSession, rows, CONTEXT_SCHEMA).select(
+        "chunk_id", F.row_number().over(Window.orderBy(F.desc("score"), "chunk_id")).alias("rank")
+    )
+    want = graph_query.graph_reasoning_enhance(
+        ranked, graph_query.chunk_similarity_edges_for(kg[0]), kg[0], cap=60
+    ).filter(F.col("source") == "graph_expansion")
+    assert _multiset(wide) == _multiset(want.select("chunk_id", "source", "similarity").collect())
+    assert 0.2 in {r[2] for r in wide}
+    monkeypatch.setattr(graph_query, "_DRIVER_BEAM_MAX_ROWS", 0)
+    DRIVER_CACHE.clear()
+    frames = run()
+    DRIVER_CACHE.clear()
+    assert [d.pop("literal") for d in driver] == [True] * len(calls)
+    assert [f.pop("literal") for f in frames] == [False] * len(calls)
+    for call, d, f in zip(calls, driver, frames):
+        assert d == f, call
+    ctx = driver[0]["context"][1]
+    assert any(r[1] == "graph_expansion" for r in ctx)
+    assert driver[0]["sources"][1]
+
+
+def test_driver_nodes_edge_cases(spark):
+    """The driver reasoning, sources and metadata twins equal the
+    DataFrame bodies on small literal frames built for their edge
+    cases: NaN scores kept (Spark's NaN > 0.0 is true), zero, negative
+    and null scores dropped, an entity-based chunk without entities
+    falling back to a chunk source, entity rows capped at 3 with the
+    200-char preview, null content, a context chunk missing from
+    chunks, duplicate mention rows, ties broken by name and chunk_id,
+    a full context (10 rows) adding nothing, and 2-hop walks that never
+    return to their seed."""
+    import math
+
+    from graphrag_spark import graph_query
+    from graphrag_spark.generation import (
+        driver_response_metadata,
+        driver_sources,
+        prepare_sources,
+        response_metadata,
+    )
+    from graphrag_spark.graph_rag import CONTEXT_SCHEMA, _reasoning_context
+    from graphrag_spark.session import literal_frame
+
+    long_text = "x" * 150 + "é" * 100
+    chunk_rows = [
+        ("c1", "d1", "nan chunk", [1.0, 0.0]),
+        ("c2", "d1", "zero", [0.0, 1.0]),
+        ("c3", "d1", "negative", [1.0, 1.0]),
+        ("c4", "d2", "null score", [1.0, 0.5]),
+        ("c5", "d2", "no entities", [0.5, 1.0]),
+        ("c6", "d2", long_text, [0.2, 1.0]),
+        ("c7", "d3", None, [1.0, 0.2]),
+        ("c8", "d3", None, [0.3, 0.3]),
+        ("c9", "d3", "sibling", [0.1, 0.9]),
+        ("c10", None, "no document", [0.9, 0.1]),
+        ("c11", "d4", "far", [0.4, 0.6]),
+        ("c12", "d4", "farther", [0.6, 0.4]),
+    ] + [(f"s{i}", "d5", f"seed doc {i}", [float(i), 1.0]) for i in range(6)]
+    chunks = literal_frame(
+        spark, chunk_rows, "chunk_id string, doc_id string, content string, embedding array<double>"
+    )
+    node_rows = [
+        ("e1", "beta", 0.9), ("e2", "alpha", 0.9), ("e3", "gamma", 0.5),
+        ("e4", "delta", 0.7), ("e5", "eps", 0.1), ("e6", "zeta", None),
+    ]
+    nodes = literal_frame(
+        spark,
+        [(e, n, i, [1.0, 0.0]) for e, n, i in node_rows],
+        "entity_id string, name string, importance double, embedding array<double>",
+    )
+    mentions = literal_frame(
+        spark,
+        [("c6", e) for e in ("e1", "e2", "e3", "e4", "e4", "e5", "e6")]
+        + [("c7", "e3"), ("c8", "e1"), ("c8", "e1"), ("c1", "e5"), ("s0", "e2")],
+        "chunk_id string, entity_id string",
+    )
+    edges = literal_frame(
+        spark,
+        [
+            ("s0", "s1", 0.9), ("s1", "c11", 0.7), ("s0", "c11", 0.6),
+            ("s1", "c12", 0.5), ("s2", "c10", 0.8), ("c10", "s0", 0.55),
+            ("c1", "c9", 0.75), ("c9", "c12", 0.65), ("s2", "s3", 0.6),
+        ],
+        "src string, dst string, similarity double",
+    )
+    index = graph_query._driver_retrieval_index(chunks, nodes, mentions)
+    state = graph_query._serving_state(chunks, index, edges)
+    assert state is not None
+    analysis = {"query_type": "analytical", "complexity": "simple"}
+    contexts = {
+        "sources": [
+            ("c1", "chunk_based", math.nan), ("c2", "hybrid", 0.0),
+            ("c3", "chunk_based", -0.5), ("c4", "chunk_based", None),
+            ("c5", "entity_based", 0.4), ("c6", "entity_based", 0.9),
+            ("c7", "entity_based", 0.8), ("c8", "chunk_based", 0.7),
+            ("zz", "chunk_based", 0.5),
+        ],
+        "expansion": [("s0", "hybrid", 0.9), ("s2", "chunk_based", 0.9), ("c1", "entity_based", 0.3)],
+        "full": [(f"s{i}", "chunk_based", 0.5) for i in range(6)]
+        + [("c5", "chunk_based", 0.4), ("c6", "entity_based", 0.4), ("c9", "hybrid", 0.3), ("c11", "hybrid", 0.2)],
+    }
+    got = {}
+    for name, rows in contexts.items():
+        retrieved = literal_frame(spark, rows, CONTEXT_SCHEMA)
+        context = _reasoning_context(retrieved, edges, chunks)
+        sources = prepare_sources(context, chunks, mentions, nodes)
+        ctx = rows + graph_query.driver_reasoning(state, rows)
+        drv = driver_sources(ctx, state.content, state.entities)
+        assert _multiset(ctx) == _multiset(context.collect()), name
+        assert _multiset(drv) == _multiset(sources.collect()), name
+        assert driver_response_metadata(ctx, analysis) == response_metadata(context, analysis), name
+        got[name] = (ctx[len(rows):], drv)
+
+    extra, srcs = got["sources"]
+    assert len(extra) == 1  # 9 retrieved rows leave a budget of one
+    by_chunk = {}
+    for r in srcs:
+        by_chunk.setdefault(r[1], []).append(r)
+    assert set(by_chunk) == {"c1", "c5", "c6", "c7", "c8"} | {r[0] for r in extra}
+    assert math.isnan(by_chunk["c1"][0][4])
+    assert [r[0] for r in by_chunk["c5"]] == ["chunk"]
+    assert [r[2] for r in by_chunk["c6"]] == ["alpha", "beta", "delta"]
+    assert by_chunk["c6"][0][5] == long_text[:200] + "..."
+    assert by_chunk["c6"][0][6] == "alpha,beta,delta,delta,gamma,eps,zeta"
+    assert by_chunk["c7"][0][5] is None and by_chunk["c8"][0][5] is None
+    assert by_chunk["c8"][0][6] == "beta,beta"
+    extra, _ = got["expansion"]
+    assert len(extra) == 7 and "s0" not in {r[0] for r in extra}
+    assert got["full"][0] == []
+
+
+def test_warm_factual_request_runs_no_spark_job(kg, spark):
+    """A warm factual request, forced through its sources, runs no Spark
+    job: retrieval, reasoning, sources and metadata all read the cached
+    driver state. With the broadcast threshold (the state's byte bound)
+    below the state's size the state declines and the DataFrame bodies
+    run jobs again."""
+    from graphrag_spark.session import DRIVER_CACHE
+
+    sc = spark.sparkContext
+    q = "what is partnership"
+
+    def jobs(group):
+        sc.setJobGroup(group, group)
+        try:
+            rows = graph_rag_query(*kg, q, top_k=5)["sources"].collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rows
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    jobs("graph_rag.cold")
+    assert jobs("graph_rag.warm") == 0
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1024")
+    DRIVER_CACHE.pop("serving_state", None)
+    try:
+        assert jobs("graph_rag.bounded") > 0
+    finally:
+        spark.conf.set(key, old)
+        DRIVER_CACHE.pop("serving_state", None)
