@@ -39,7 +39,9 @@ Two execution strategies, auto-selected by edge count:
    result (no extra join, no extra shuffle), is an exact convergence
    test. Each iteration ``localCheckpoint()``s to cut the growing
    lineage (SURVEY.md §4 item 1); shuffles are sized to the component
-   graph, not the corpus.
+   graph, not the corpus, by an explicit partition count on every
+   exchange: the session's ``spark.sql.shuffle.partitions`` is never
+   changed, since a stage planned on another thread would pick it up.
 
 Both paths produce identical output (component = min reachable node
 id; UTF-8 binary string order equals Python's code-point order) and
@@ -70,17 +72,17 @@ DRIVER_CC_MAX_EDGES = 2_000_000
 SALT_MIN_EDGES = 1_000_000
 
 
-def _two_phase_min(df: DataFrame, key: str, value: str, salt_buckets: int) -> DataFrame:
-    """groupBy(key).min(value), salted (two-phase) when salt_buckets>1."""
-    if salt_buckets <= 1:
-        return df.groupBy(key).agg(F.min(value).alias(value))
-    return (
-        df.withColumn("salt", F.pmod(F.xxhash64(key, value), F.lit(salt_buckets)).cast("int"))
-        .groupBy(key, "salt")
-        .agg(F.min(value).alias(value))
-        .groupBy(key)
-        .agg(F.min(value).alias(value))
-    )
+def _two_phase_min(df: DataFrame, key: str, value: str, salt_buckets: int, parts: int) -> DataFrame:
+    """groupBy(key).min(value) over ``parts`` hash partitions of key,
+    salted (two-phase) when salt_buckets>1."""
+    if salt_buckets > 1:
+        df = (
+            df.withColumn("salt", F.pmod(F.xxhash64(key, value), F.lit(salt_buckets)).cast("int"))
+            .repartition(parts, key, "salt")
+            .groupBy(key, "salt")
+            .agg(F.min(value).alias(value))
+        )
+    return df.repartition(parts, key).groupBy(key).agg(F.min(value).alias(value))
 
 
 def _union_find_labels(edge_rows: list[tuple]) -> list[tuple]:
@@ -134,7 +136,7 @@ def connected_components(
     disables it — tests use this to force the distributed loop).
     ``cc_partitions`` sizes the loop's shuffles to the *component
     graph* (distinct surfaces/aliases — vocabulary-bounded), not the
-    corpus; auto-sized from the deduplicated edge count when not given."""
+    corpus; auto-sized from the edge count when not given."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
         F.col("src").isNotNull() & F.col("dst").isNotNull()
     ).distinct()
@@ -156,9 +158,7 @@ def connected_components(
     else:
         e = e.localCheckpoint(eager=True)
 
-    bidir = e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
-    bidir = bidir.localCheckpoint(eager=True)
-    n_edges = bidir.count()
+    n_edges = 2 * e.count()  # both directions: a bound on the symmetric edge count
     if cc_partitions is None:
         cc_partitions = max(2, min(256, n_edges // 100_000 + 2))
     if n_edges < SALT_MIN_EDGES and salt_buckets == CC_SALT_BUCKETS:
@@ -166,52 +166,55 @@ def connected_components(
         # salt_buckets argument is honored — tests force the salted path)
         salt_buckets = 1
 
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(cc_partitions))
-    try:
-        bidir = bidir.repartition(cc_partitions, "src").localCheckpoint(eager=True)
+    # hash-partitioned by src, the distinct needs no second exchange
+    bidir = (
+        e.union(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+        .repartition(cc_partitions, "src")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    labels = (
+        bidir.select(F.col("src").alias("node"))
+        .union(bidir.select(F.col("dst").alias("node")))
+        .repartition(cc_partitions, "node")
+        .distinct()
+        .withColumn("component", F.col("node"))
+        .localCheckpoint(eager=True)
+    )
 
-        labels = (
-            bidir.select(F.col("src").alias("node"))
-            .union(bidir.select(F.col("dst").alias("node")))
-            .distinct()
-            .withColumn("component", F.col("node"))
+    for _ in range(max_iterations):
+        # per-node min over neighbor labels (edges are symmetric, so
+        # every node receives at least one message)
+        by_node = labels.repartition(cc_partitions, "node")
+        nbr = _two_phase_min(
+            bidir.join(by_node, bidir.src == by_node.node)
+            .select(F.col("dst").alias("node"), F.col("component")),
+            "node", "component", salt_buckets, cc_partitions,
+        ).withColumnRenamed("component", "nbr_min")
+        merged = (
+            by_node.join(nbr, "node")
+            .select(
+                "node",
+                F.least("component", "nbr_min").alias("component"),
+                (F.col("nbr_min") < F.col("component")).alias("chg"),
+            )
+        )
+        # pointer doubling: jump to the label's own label (<= label,
+        # since labels are monotone non-increasing) -> O(log diameter)
+        # iterations instead of O(diameter)
+        lbl2 = merged.select(
+            F.col("node").alias("cnode"), F.col("component").alias("ccomp")
+        ).repartition(cc_partitions, "cnode")
+        new_labels = (
+            merged.repartition(cc_partitions, "component")
+            .join(lbl2, merged.component == lbl2.cnode, "left")
+            .select("node", F.coalesce("ccomp", "component").alias("component"), "chg")
             .localCheckpoint(eager=True)
         )
-
-        for _ in range(max_iterations):
-            # per-node min over neighbor labels (edges are symmetric, so
-            # every node receives at least one message)
-            nbr = _two_phase_min(
-                bidir.join(labels, bidir.src == labels.node)
-                .select(F.col("dst").alias("node"), F.col("component")),
-                "node", "component", salt_buckets,
-            ).withColumnRenamed("component", "nbr_min")
-            merged = (
-                labels.join(nbr, "node")
-                .select(
-                    "node",
-                    F.least("component", "nbr_min").alias("component"),
-                    (F.col("nbr_min") < F.col("component")).alias("chg"),
-                )
-            )
-            # pointer doubling: jump to the label's own label (<= label,
-            # since labels are monotone non-increasing) -> O(log diameter)
-            # iterations instead of O(diameter)
-            lbl2 = merged.select(
-                F.col("node").alias("cnode"), F.col("component").alias("ccomp")
-            )
-            new_labels = (
-                merged.join(lbl2, merged.component == lbl2.cnode, "left")
-                .select("node", F.coalesce("ccomp", "component").alias("component"), "chg")
-                .localCheckpoint(eager=True)
-            )
-            labels = new_labels.drop("chg")
-            # convergence: no neighbor-min beat an own label anywhere
-            # (then doubling was the identity too — see module docstring).
-            # Scans the just-checkpointed partitions: no join, no shuffle.
-            if new_labels.filter("chg").limit(1).count() == 0:
-                break
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+        labels = new_labels.drop("chg")
+        # convergence: no neighbor-min beat an own label anywhere
+        # (then doubling was the identity too — see module docstring).
+        # Scans the just-checkpointed partitions: no join, no shuffle.
+        if new_labels.filter("chg").limit(1).count() == 0:
+            break
     return labels.select("node", "component")

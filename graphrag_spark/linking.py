@@ -76,18 +76,32 @@ def dedup_entities(mentions: DataFrame, salt_buckets: int = SALT_BUCKETS) -> Dat
     )
 
 
-def alias_dictionary(spark: SparkSession) -> DataFrame:
-    """The broadcast side of the link join (FIXTURES.md §2): one row per
-    normalized alias surface -> canonical entity, with link prior."""
-    rows = [
+def alias_rows() -> list[tuple[str, str, str, float]]:
+    """(alias_key, canonical_name, entity_type, prior) per vocabulary
+    alias: the normalized alias surface -> canonical entity."""
+    return [
         (py_norm_name(alias).lower(), canonical, py_norm_type(etype), float(prior))
         for alias, canonical, etype, prior in aliases_as_rows()
     ]
-    df = literal_frame(spark, rows, "alias_key string, canonical_name string, entity_type string, prior double")
-    return df.groupBy("alias_key").agg(
-        F.max_by("canonical_name", F.struct(F.col("prior"), F.col("canonical_name"))).alias("canonical_name"),
-        F.max_by("entity_type", F.struct(F.col("prior"), F.col("entity_type"))).alias("canonical_type"),
-        F.max("prior").alias("prior"),
+
+
+def alias_dictionary(spark: SparkSession) -> DataFrame:
+    """The broadcast side of the link join (FIXTURES.md §2): one row per
+    normalized alias surface -> canonical entity, with link prior.
+
+    The reduction over aliases sharing a key runs on the driver and the
+    result is a literal frame, so no Spark job builds it: per key the
+    canonical name of the greatest (prior, canonical_name), the type of
+    the greatest (prior, entity_type) and the greatest prior, as a
+    ``groupBy`` / ``max_by`` over ``alias_rows()`` gives (tested equal)."""
+    best: dict[str, tuple] = {}
+    for key, canonical, etype, prior in alias_rows():
+        name, typ = best.get(key, ((prior, canonical), (prior, etype)))
+        best[key] = (max(name, (prior, canonical)), max(typ, (prior, etype)))
+    return literal_frame(
+        spark,
+        [(key, name, etype, prior) for key, ((prior, name), (_, etype)) in best.items()],
+        "alias_key string, canonical_name string, canonical_type string, prior double",
     )
 
 

@@ -27,8 +27,9 @@ ASCII fixture corpus.
 
 Two implementations with identical behavior, tested against each other:
 ``norm_*_col`` (native Spark Column expressions — WholeStageCodegen,
-used by the pipeline) and ``py_norm_*`` (pure Python — used by the
-reference-port oracle and property tests).
+used by the pipeline's per-row paths) and ``py_norm_*`` (pure Python —
+used by the reference-port oracle, property tests and the driver-built
+vocabulary frames: the narrow surface map and the alias dictionary).
 """
 
 from __future__ import annotations
@@ -172,6 +173,22 @@ def surface_norm_map(mentions_raw: DataFrame) -> DataFrame:
     return _norm_flag_cols(mentions_raw.select("name", "type_or_target").distinct())
 
 
+def py_surface_map_rows(pairs) -> list[tuple]:
+    """``_norm_flag_cols`` on the driver: (name, type_or_target) pairs
+    -> (name, type_or_target, norm_name, norm_type, low_name,
+    generic_name) rows, in input order, through the Python twins
+    (tested row for row against the Spark columns)."""
+    out = []
+    for name, etype in pairs:
+        norm = py_norm_name(name)
+        lower = norm.lower()
+        out.append((
+            name, etype, norm, py_norm_type(etype),
+            any(p.match(lower) for p in _LOW_RE), any(p.match(lower) for p in _GEN_RE),
+        ))
+    return out
+
+
 def _norm_flag_cols(pairs: DataFrame) -> DataFrame:
     """Attach norm_name/norm_type + precomputed low-value flags to a
     distinct (name, type_or_target) pair frame."""
@@ -199,7 +216,8 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
     (scan + shuffle) subtree — AQE otherwise re-runs that subtree once
     per downstream query stage. The surface and canonical maps are
     bounded by the alias vocabulary (O(10^4) rows regardless of corpus
-    size).
+    size). A frame whose rows a tested Python twin already computed on
+    the driver carries them as ``_graphrag_rows``; then no job runs.
 
     Graceful degradation (r3 VERDICT item 5): if the frame exceeds the
     cap — an open-vocabulary extractor at 100x corpus scale — the job
@@ -207,7 +225,9 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
     returned unchanged, flagged so ``maybe_broadcast`` skips the
     broadcast hint and downstream joins fall back to shuffle joins
     (AQE may still auto-broadcast genuinely small subtrees)."""
-    rows = df.limit(_MAX_SURFACE_MAP_ROWS + 1).collect()
+    rows = getattr(df, "_graphrag_rows", None)
+    if rows is None:
+        rows = df.limit(_MAX_SURFACE_MAP_ROWS + 1).collect()
     if len(rows) > _MAX_SURFACE_MAP_ROWS:
         import warnings
 
@@ -264,7 +284,9 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     column come from the deterministic scanner, whose emitted surfaces
     are by construction a subset of the alias vocabulary — so the
     distinct (surface, messy_type) pair set is read straight off the
-    vocabulary payload table instead of a full corpus scan + distinct.
+    vocabulary payload table instead of a full corpus scan + distinct,
+    and normalized on the driver (``py_surface_map_rows``): the map is
+    a literal frame and no Spark job runs.
     The narrow shape's surfaces MUST come from the vocabulary: a surface
     outside it has no map row here, and ``entities_from_occurrences``
     fails the job on it rather than dropping it.
@@ -275,12 +297,11 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     if "type_or_target" not in mentions_raw.columns:
         from .extraction import _surface_payload_rows
 
-        pairs = literal_frame(
-            mentions_raw.sparkSession,
-            [(name, etype) for name, etype, _score, _desc in _surface_payload_rows()],
-            "name string, type_or_target string",
-        )
-        return _materialize_small(_norm_flag_cols(pairs), "surface_map")
+        rows = [(name, etype) for name, etype, _score, _desc in _surface_payload_rows()]
+        pairs = literal_frame(mentions_raw.sparkSession, rows, "name string, type_or_target string")
+        smap = _norm_flag_cols(pairs)
+        smap._graphrag_rows = py_surface_map_rows(rows)  # type: ignore[attr-defined]
+        return _materialize_small(smap, "surface_map")
     return _materialize_small(surface_norm_map(mentions_raw), "surface_map")
 
 

@@ -1,11 +1,11 @@
 """End-to-end KG-construction pipeline, declared once as a stage list.
 
-``STAGES`` is the whole DAG in build order. Each ``Stage`` names the
-upstream stages its build reads, its build function and its committed
-layout:
+``STAGES`` is the whole DAG. Each ``Stage`` names the upstream stages
+its build reads, its build function and its committed layout:
 
   chunks     <- documents          chunk rows + embedding
-  extracted  <- chunks             mention occurrences (or long rows)
+  extracted  <- documents          mention occurrences (fused chunk+scan)
+                (<- chunks with a custom extractor: long or wide rows)
   entities   <- extracted          dedup + alias-dictionary link
   cmap       <- entities           connected-components canonical map
   nodes      <- cmap               partitioned by entity_type
@@ -16,38 +16,56 @@ Two runners execute that list:
 
 - ``run_in_memory`` builds every stage into one lazy DataFrame graph and
   persists the ``cached`` stages (tests, bench.py, the flagship query).
-- ``KGPipeline.run`` writes each stage to its own table, appends
-  per-partition rows to a ``_lineage`` table (stage, stage_hash,
-  partition_id, doc_id_min, doc_id_max, row_count, committed_at) and
-  reads the stage back. A rerun reads a stage back instead of building
-  it when its stage hash (params + upstream hashes) is the latest one
-  committed — the kill/resume contract (BASELINE.json north_star;
+- ``KGPipeline.run`` schedules the list as a DAG: each stage runs on
+  its own thread as soon as the stages its build reads are committed,
+  so with the default extractor the whole entity chain runs beside the
+  chunk+embed pass, and nodes, mentions and triples run together. A
+  stage writes its table, appends one row per written part file to a
+  ``_lineage`` table (stage, stage_hash, partition_id, doc_id_min,
+  doc_id_max, row_count, committed_at) and is read back. Lineage rows
+  come from the part files' Parquet footers and the read-back takes
+  its schema from them, so the write is the stage's only Spark job. A
+  rerun reads a stage back instead of building it when its stage hash
+  (params + the hashes of the stages its build reads) is the latest
+  one committed — the kill/resume contract (BASELINE.json north_star;
   SURVEY.md §4 item 4).
 
-The runners differ only in the extraction input: in memory, the fused
-chunk+scan pass over the documents, because nothing is committed to
-read from; checkpointed, the scanner over the committed chunks.
-Intermediates several stages share (the surface map, the normalized
-mentions, the canonical-map broadcast guard) are derived on first use
-inside a build, so a stage that is read back never pays for them.
+With the default extractor the runners build the same frames: the
+extraction input is the fused chunk+scan pass over the documents in
+both. Only a custom extractor reads chunks, the lazy ones in memory
+and the committed table checkpointed. Intermediates several stages
+share (the surface map, the normalized mentions, the canonical-map
+broadcast guard) are derived once, on first use inside a build and
+under the run's lock, so a stage that is read back never pays for
+them.
 
-The reference runs this flow per-document with asyncio/threads
-(ingestion/document_processor.py:394-750); here every stage is one
-distributed job and document parallelism is Spark task parallelism.
+The reference overlaps its per-document work with asyncio/threads
+(ingestion/document_processor.py:394-750); here document parallelism
+is Spark task parallelism, and the checkpointed runner overlaps whole
+stages the same way.
 """
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
+import queue
+import struct
+import threading
 import time
+import uuid
 from dataclasses import dataclass, field
-from functools import cached_property
 from typing import Callable, NamedTuple
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from . import chunking, extraction, linking, materialize, normalize
 from .corpus import document_text
@@ -58,13 +76,108 @@ LINEAGE_SCHEMA = (
 )
 
 
+class _PartFile(NamedTuple):
+    """One data file of a committed stage: a local path, or a Hadoop
+    Path with its FileSystem (``fs``) for any other scheme."""
+
+    path: object
+    length: int
+    fs: object = None
+
+
+class _Footer(NamedTuple):
+    """What a part file's Parquet footer says: its row count, the
+    ``doc_col`` range from the column statistics and its schema. That
+    is the one Spark recorded, which Spark's schema inference reads
+    too; for another writer (the corpus) the Arrow schema, when every
+    type maps one to one (``_plain``)."""
+
+    rows: int
+    doc_min: str | None
+    doc_max: str | None
+    schema: StructType | None
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _plain(t: pa.DataType) -> bool:
+    """Arrow types Spark's Parquet schema inference maps one to one, as
+    ``from_arrow_schema`` does (timestamps, for one, differ)."""
+    if pa.types.is_list(t):
+        return _plain(t.value_type)
+    if pa.types.is_struct(t):
+        return all(_plain(f.type) for f in t)
+    return any(
+        is_type(t) for is_type in (
+            pa.types.is_string, pa.types.is_binary, pa.types.is_boolean, pa.types.is_int8,
+            pa.types.is_int16, pa.types.is_int32, pa.types.is_int64, pa.types.is_float32,
+            pa.types.is_float64, pa.types.is_decimal, pa.types.is_date32,
+        )
+    )
+
+
+def _read_footer(f: _PartFile, doc_col: str | None = None) -> _Footer:
+    """Read ``f``'s footer on the driver, no Spark job: a local file
+    with pyarrow; any other through its Hadoop FileSystem, the trailing
+    length and magic and then the metadata block, parsed by pyarrow
+    behind a stand-in header magic."""
+    if f.fs is None:
+        meta = pq.read_metadata(f.path)
+    else:
+        read = SparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray
+        stream = f.fs.open(f.path)
+        try:
+            stream.seek(f.length - 8)
+            tail = bytes(read(stream, 8))
+            (n,) = struct.unpack("<I", tail[:4])
+            stream.seek(f.length - 8 - n)
+            meta = pq.read_metadata(pa.BufferReader(b"PAR1" + bytes(read(stream, n)) + tail))
+        finally:
+            stream.close()
+    lo = hi = None
+    cols = [meta.schema.column(j).path for j in range(meta.num_columns)]
+    if doc_col in cols:
+        j = cols.index(doc_col)
+        for g in range(meta.num_row_groups):
+            if meta.row_group(g).num_rows == 0:
+                continue
+            stats = meta.row_group(g).column(j).statistics
+            if stats is None or not stats.has_min_max:
+                lo = hi = None
+                break
+            lo = stats.min if lo is None else min(lo, stats.min)
+            hi = stats.max if hi is None else max(hi, stats.max)
+    spark_schema = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    arrow = meta.schema.to_arrow_schema()
+    if spark_schema:
+        schema = StructType.fromJson(json.loads(spark_schema))
+    elif all(_plain(f.type) for f in arrow):
+        schema = from_arrow_schema(arrow)
+    else:
+        schema = None
+    return _Footer(meta.num_rows, lo, hi, schema)
+
+
+def _is_local(fs) -> bool:
+    return fs.getScheme() == "file"
+
+
+def _local_or_hadoop(fs, hpath, length: int) -> _PartFile:
+    if _is_local(fs):
+        return _PartFile(hpath.toUri().getPath(), length)
+    return _PartFile(hpath, length, fs)
+
+
 @dataclass(frozen=True)
 class Stage:
     """One node of the KG DAG. ``inputs`` are the upstream stages its
-    build reads (their hashes key this stage's hash); ``partition_by``
-    and ``bucket_col`` are the committed layout; ``doc_col`` is the
-    column whose per-partition range the lineage rows record;
-    ``run_in_memory`` persists the ``cached`` stages."""
+    build reads, ``extractor_inputs`` what it reads instead when a
+    custom extractor is plugged (``reads``). The stages it reads key
+    its hash and, in ``KGPipeline.run``, are committed before it
+    starts. ``partition_by`` and ``bucket_col`` are the committed
+    layout; ``doc_col`` is the column whose per-file range the lineage
+    rows record; ``run_in_memory`` persists the ``cached`` stages."""
 
     name: str
     inputs: tuple[str, ...]
@@ -73,6 +186,12 @@ class Stage:
     bucket_col: str | None = None
     doc_col: str | None = None
     cached: bool = False
+    extractor_inputs: tuple[str, ...] | None = None
+
+    def reads(self, run: KGRun) -> tuple[str, ...]:
+        if run.extractor is not None and self.extractor_inputs is not None:
+            return self.extractor_inputs
+        return self.inputs
 
 
 class _Views(NamedTuple):
@@ -84,10 +203,29 @@ class _Views(NamedTuple):
     triples: Callable[[DataFrame], DataFrame]  # cmap -> triples
 
 
+def _shared(fn):
+    """A property derived once per run, under the run's lock: stages on
+    concurrent threads may ask for it together, and
+    ``functools.cached_property`` has no lock from Python 3.12 on. The
+    lock is reentrant because one intermediate derives another."""
+    name = fn.__name__
+
+    @functools.wraps(fn)
+    def get(self):
+        if name not in self.__dict__:
+            with self._lock:
+                if name not in self.__dict__:
+                    self.__dict__[name] = fn(self)
+        return self.__dict__[name]
+
+    return property(get)
+
+
 class KGRun:
     """One run of ``STAGES``: its parameters, the stage outputs so far
-    (``out``) and the intermediates several stages share, each derived
-    on first use."""
+    (``out``), the row counts of the stages committed in this run
+    (``rows``) and the intermediates several stages share, each
+    derived on first use."""
 
     def __init__(
         self,
@@ -107,6 +245,8 @@ class KGRun:
         self.extractor = extractor
         self.in_memory = in_memory
         self.out: dict[str, DataFrame] = {}
+        self.rows: dict[str, int] = {}
+        self._lock = threading.RLock()
 
     def build(self, stage: Stage) -> DataFrame:
         """The in-memory step: build ``stage``, persisting it if cached."""
@@ -114,13 +254,13 @@ class KGRun:
         self.out[stage.name] = df.persist() if stage.cached else df
         return self.out[stage.name]
 
-    @cached_property
+    @_shared
     def chunks_base(self) -> DataFrame:
         return chunking.with_quality(
             chunking.chunk_documents(document_text(self.docs), self.chunk_size, self.overlap)
         )
 
-    @cached_property
+    @_shared
     def views(self) -> _Views:
         """The extraction-format branch. Occurrence rows (the default
         scanner's narrow shape) read their surface map off the alias
@@ -149,25 +289,30 @@ class KGRun:
             ),
         )
 
-    @cached_property
+    @_shared
     def smap(self) -> DataFrame:
         return normalize.materialize_surface_map(self.views.surfaces)
 
-    @cached_property
+    @_shared
     def mentions_norm(self) -> DataFrame:
         df = normalize.normalize_mentions(self.views.mentions_raw, self.smap)
         return df.persist() if self.in_memory else df
 
-    @cached_property
+    @_shared
     def rels_norm(self) -> DataFrame:
         return self.views.rels_norm()
 
-    @cached_property
+    @_shared
     def broadcast_cmap(self) -> bool:
         # broadcast the canonical map only while it provably fits —
         # with an open-vocabulary extractor the map grows with distinct
-        # entities and a forced broadcast would OOM at corpus scale
-        return self.out["cmap"].count() <= materialize.BROADCAST_MAP_MAX_ROWS
+        # entities and a forced broadcast would OOM at corpus scale. A
+        # map committed in this run counts its rows in its part-file
+        # footers: no counting job
+        n = self.rows.get("cmap")
+        if n is None:
+            n = self.out["cmap"].count()
+        return n <= materialize.BROADCAST_MAP_MAX_ROWS
 
 
 def _chunks(run: KGRun) -> DataFrame:
@@ -183,25 +328,28 @@ def _chunks(run: KGRun) -> DataFrame:
 
 
 def _extracted(run: KGRun) -> DataFrame:
-    """The one per-runner difference. Checkpointed, the extractor reads
-    the committed chunks. In memory, the default extractor is the fused
-    chunk+scan pass (r6, guide §4.1: chunk text never round-trips
-    through the JVM between two MapInPandas stages), and a custom one
-    reads the lazy chunk rows without embeddings.
+    """The default extractor is the fused chunk+scan pass over the
+    documents in both runners (r6, guide §4.1: chunk text never
+    round-trips through the JVM between two MapInPandas stages), so
+    the stage reads no other stage and, checkpointed, runs beside the
+    chunks stage. Its rows equal ``extract_occurrences`` over the
+    chunks (pytest-asserted).
 
     A custom extractor (r3 VERDICT item 3) — typically
     ``extraction.llm_extractor(respond_fn)``, the reference's batched
     LLM call (core/entity_extraction.py:448-472) — is a callable
     ``chunks_df -> DataFrame`` emitting OCCURRENCE_SCHEMA rows or
-    long-format EXTRACT_SCHEMA rows (``output_format = 'long'``)."""
-    if not run.in_memory:
-        return (run.extractor or extraction.extract_occurrences)(run.out["chunks"])
+    long-format EXTRACT_SCHEMA rows (``output_format = 'long'``). It
+    reads the lazy chunk rows without embeddings in memory and the
+    committed chunks checkpointed."""
     if run.extractor is None:
         occ = extraction.extract_occurrences_from_docs(
             document_text(run.docs), run.chunk_size, run.overlap
         )
     else:
-        occ = run.extractor(run.chunks_base)
+        occ = run.extractor(run.chunks_base if run.in_memory else run.out["chunks"])
+    if not run.in_memory:
+        return occ
     # The extraction cache is persisted ALREADY HASH-PARTITIONED BY
     # chunk_id (r6, guide §2.4 "remove shuffles outright"): every hot
     # consumer clusters on a chunk_id-prefixed key — the per-chunk
@@ -224,7 +372,10 @@ def _entities(run: KGRun) -> DataFrame:
 
 STAGES: tuple[Stage, ...] = (
     Stage("chunks", (), _chunks, doc_col="doc_id"),
-    Stage("extracted", ("chunks",), _extracted, doc_col="doc_id", cached=True),
+    Stage(
+        "extracted", (), _extracted, doc_col="doc_id", cached=True,
+        extractor_inputs=("chunks",),
+    ),
     # cached: canonical_map reads entities THREE times (CC edges,
     # members, reps) across two actions — the union-find edge collect
     # materializes the cache once and the cmap materialization reads it
@@ -247,6 +398,47 @@ STAGES: tuple[Stage, ...] = (
         bucket_col="subj",
     ),
 )
+
+
+def _run_dag(
+    stages: tuple[Stage, ...], reads: dict[str, tuple[str, ...]], step: Callable[[Stage], None]
+) -> None:
+    """Run ``step(stage)`` for every stage, each on its own
+    ``InheritableThread`` (the caller's job group and local properties
+    carry over) started by this thread as soon as every stage in
+    ``reads[stage.name]`` has finished. Once a stage fails no further
+    stage starts: the running ones are joined and the first error is
+    raised."""
+    done: queue.SimpleQueue = queue.SimpleQueue()
+    waiting = list(stages)
+    running: dict[str, InheritableThread] = {}
+    finished: set[str] = set()
+    error: BaseException | None = None
+
+    def work(stage: Stage) -> None:
+        try:
+            step(stage)
+        except BaseException as e:  # handed to the scheduling thread
+            done.put((stage.name, e))
+        else:
+            done.put((stage.name, None))
+
+    while True:
+        if error is None:
+            for stage in [s for s in waiting if finished.issuperset(reads[s.name])]:
+                waiting.remove(stage)
+                running[stage.name] = InheritableThread(work, args=(stage,), name=f"kg-{stage.name}")
+                running[stage.name].start()
+        if not running:
+            break
+        name, err = done.get()
+        running.pop(name).join()
+        if err is None:
+            finished.add(name)
+        elif error is None:
+            error = err
+    if error is not None:
+        raise error
 
 
 def run_in_memory(
@@ -299,6 +491,9 @@ class KGPipeline:
     def _path(self, stage: str) -> str:
         return os.path.join(self.work_dir, stage)
 
+    def _table(self, stage: str) -> str | None:
+        return f"{self.iceberg_prefix}.{stage}" if self.iceberg_prefix else None
+
     def _lineage_path(self) -> str:
         return os.path.join(self.work_dir, "_lineage")
 
@@ -319,66 +514,122 @@ class KGPipeline:
     def stage_hash(self, stage: str, upstream: str) -> str:
         return hashlib.md5(f"{stage}|{upstream}|{self._params_fingerprint()}".encode()).hexdigest()
 
+    def _fs(self, path: str):
+        """``path`` as a Hadoop Path and its FileSystem — honors the
+        path's scheme (file://, s3a://, hdfs://), unlike os.path, which
+        silently misses object stores and would degrade resume to full
+        recompute on a cluster."""
+        hpath = self.spark._jvm.org.apache.hadoop.fs.Path(path)
+        return hpath, hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+
     def _fs_exists(self, path: str) -> bool:
-        """Existence check via the Hadoop FileSystem API — honors the
-        path's scheme (file://, s3a://, hdfs://), unlike os.path.exists
-        which silently returns False for object stores and would
-        degrade resume to full recompute on a cluster."""
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+        hpath, fs = self._fs(path)
         return bool(fs.exists(hpath))
 
     def _committed(self) -> dict[str, str]:
-        """stage -> most recently committed stage_hash.
+        """stage -> most recently committed stage_hash; {} before the
+        first commit. Any other read error is raised: silently
+        recomputing every stage would hide a broken lineage table.
 
         Lineage is append-only: a stage recomputed under different
         params leaves both hashes in the table. Resolving by latest
         committed_at pins resume to the hash that matches the data
         actually sitting in the stage dir (the newest write), so
         reverting params can never silently reuse stale output."""
-        try:
-            rows = (
-                self.spark.read.parquet(self._lineage_path())
-                .groupBy("stage")
-                .agg(F.max_by("stage_hash", "committed_at").alias("stage_hash"))
-                .collect()
-            )
-        except Exception:
+        if not self._fs_exists(self._lineage_path()):
             return {}
+        rows = (
+            self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage_path())
+            .groupBy("stage")
+            .agg(F.max_by("stage_hash", "committed_at").alias("stage_hash"))
+            .collect()
+        )
         return {r["stage"]: r["stage_hash"] for r in rows}
 
-    def _commit(self, stage: str, stage_hash: str, doc_col: str | None, out: DataFrame) -> None:
-        """Append per-partition lineage rows for a just-written stage,
-        ``out`` being its read-back."""
-        if doc_col is not None and doc_col in out.columns:
-            stats = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-                F.min(doc_col).alias("doc_id_min"),
-                F.max(doc_col).alias("doc_id_max"),
-                F.count("*").alias("row_count"),
-            )
-        else:
-            stats = out.agg(F.count("*").alias("row_count")).select(
-                F.lit(-1).alias("partition_id"),
-                F.lit(None).cast("string").alias("doc_id_min"),
-                F.lit(None).cast("string").alias("doc_id_max"),
-                "row_count",
-            )
+    def _part_files(self, path: str, table: str | None) -> list[_PartFile]:
+        """The data files of a committed stage, in path order: the files
+        a catalog table's scan reads (``inputFiles``, no job), or every
+        file under ``path`` outside hidden (``_``/``.``) entries, the
+        same ones a Parquet scan of ``path`` reads. Local files are
+        listed by Python: a py4j round trip per file costs about 1 ms."""
+        if table is not None:
+            files = []
+            for f in sorted(self.spark.read.table(table).inputFiles()):
+                hpath, fs = self._fs(f)
+                files.append(_local_or_hadoop(fs, hpath, fs.getFileStatus(hpath).getLen()))
+            return files
+        root, fs = self._fs(path)
+        if _is_local(fs):
+            files = []
+            for d, dirs, names in os.walk(fs.makeQualified(root).toUri().getPath()):
+                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+                for n in names:
+                    if not n.startswith(("_", ".")):
+                        files.append(_PartFile(os.path.join(d, n), os.path.getsize(os.path.join(d, n))))
+            return sorted(files)
+        prefix = len(root.toUri().getPath().rstrip("/"))
+        files, it = [], fs.listFiles(root, True)
+        while it.hasNext():
+            status = it.next()
+            hpath = status.getPath()
+            rel = hpath.toUri().getPath()[prefix:].strip("/").split("/")
+            if not any(part.startswith(("_", ".")) for part in rel):
+                files.append(_PartFile(hpath, status.getLen(), fs))
+        return sorted(files, key=lambda f: f.path.toString())
+
+    def _read_stage(self, path: str, table: str | None, footer: _Footer | None = None) -> DataFrame:
+        """A committed stage's table. A Parquet dir is read with the
+        schema in its footers (``footer``: one of them, else the first
+        file's), so no schema-inference job runs; partition columns are
+        discovered from the directory names as before. Without a schema
+        Spark can take (no file, an unsupported type) Spark infers it."""
+        if table is not None:
+            return self.spark.read.table(table)
+        if footer is None:
+            files = self._part_files(path, table)
+            footer = _read_footer(files[0]) if files else None
+        if footer is None or footer.schema is None:
+            return self.spark.read.parquet(path)
+        return self.spark.read.schema(footer.schema).parquet(path)
+
+    def _commit(self, stage: Stage, stage_hash: str) -> tuple[DataFrame, int]:
+        """Commit a just-written stage with no Spark job: read its part
+        files' footers on the driver, append its lineage rows and
+        return its read-back and row count.
+
+        One lineage row per non-empty part file (``partition_id`` its
+        index in path order) holds the file's row count and
+        ``doc_col`` range from the footer; a stage with no rows gets
+        one row_count-0 row, so it still resumes. The rows go to one
+        driver-written Parquet file, written under a hidden name and
+        then renamed, so a killed driver never leaves a partial file
+        the lineage read would see."""
+        path, table = self._path(stage.name), self._table(stage.name)
+        footers = [_read_footer(f, stage.doc_col) for f in self._part_files(path, table)]
         now = float(time.time())
-        lineage = stats.select(
-            F.lit(stage).alias("stage"),
-            F.lit(stage_hash).alias("stage_hash"),
-            "partition_id",
-            "doc_id_min",
-            "doc_id_max",
-            "row_count",
-            F.lit(now).alias("committed_at"),
-        )
-        lineage.write.mode("append").parquet(self._lineage_path())
+        rows = [
+            (stage.name, stage_hash, i, f.doc_min, f.doc_max, f.rows, now)
+            for i, f in enumerate(f for f in footers if f.rows > 0)
+        ] or [(stage.name, stage_hash, -1, None, None, 0, now)]
+        schema = to_arrow_schema(_parse_datatype_string(LINEAGE_SCHEMA))
+        cols = [pa.array(c, f.type) for c, f in zip(zip(*rows), schema)]
+        buf = pa.BufferOutputStream()
+        pq.write_table(pa.Table.from_arrays(cols, schema=schema), buf)
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        final, fs = self._fs(os.path.join(self._lineage_path(), name))
+        tmp, _ = self._fs(os.path.join(self._lineage_path(), f".{name}.tmp"))
+        out = fs.create(tmp, False)
+        try:
+            out.write(buf.getvalue().to_pybytes())
+        finally:
+            out.close()
+        if not fs.rename(tmp, final):
+            raise OSError(f"could not rename {tmp} to {final}")
+        out = self._read_stage(path, table, footers[0] if footers else None)
+        return out, sum(f.rows for f in footers)
 
     def _run_stage(self, stage: Stage, h: str, run: KGRun, committed: bool) -> DataFrame:
-        path = self._path(stage.name)
-        table = f"{self.iceberg_prefix}.{stage.name}" if self.iceberg_prefix else None
+        path, table = self._path(stage.name), self._table(stage.name)
         if committed and self._stage_output_exists(path, table):
             return self._read_stage(path, table)
         t0 = time.time()
@@ -388,15 +639,9 @@ class KGPipeline:
             buckets=self.buckets if stage.bucket_col else None,
             bucket_col=stage.bucket_col, iceberg_table=table,
         )
-        out = self._read_stage(path, table)
-        self._commit(stage.name, h, stage.doc_col, out)
+        out, run.rows[stage.name] = self._commit(stage, h)
         self.stage_times[stage.name] = time.time() - t0
         return out
-
-    def _read_stage(self, path: str, table: str | None) -> DataFrame:
-        if table is not None:
-            return self.spark.read.table(table)
-        return self.spark.read.parquet(path)
 
     def _stage_output_exists(self, path: str, table: str | None) -> bool:
         if table is not None:
@@ -406,19 +651,26 @@ class KGPipeline:
     # ---------------------------------------------------------------- stages
 
     def run(self, resume: bool = True) -> dict[str, DataFrame]:
-        """Checkpointed runner: each stage of ``STAGES`` is read back if
-        committed under its current hash, else built, written, committed
-        to lineage and read back."""
+        """Checkpointed runner: ``STAGES`` as a DAG (``_run_dag``). Each
+        stage is read back if committed under its current hash, else
+        built, written, committed to lineage and read back."""
+        # the corpus too is read with its footer's schema: no inference job
         run = KGRun(
-            self.spark, self.spark.read.parquet(self.corpus_path), self.chunk_size,
+            self.spark, self._read_stage(self.corpus_path, None), self.chunk_size,
             self.chunk_overlap, self.salt_buckets, self.extractor, in_memory=False,
         )
         committed = self._committed() if resume else {}
+        reads = {stage.name: stage.reads(run) for stage in STAGES}
         hashes: dict[str, str] = {}
         for stage in STAGES:
-            upstream = "|".join(hashes[s] for s in stage.inputs) or "root"
-            h = hashes[stage.name] = self.stage_hash(stage.name, upstream)
+            upstream = "|".join(hashes[s] for s in reads[stage.name]) or "root"
+            hashes[stage.name] = self.stage_hash(stage.name, upstream)
+
+        def step(stage: Stage) -> None:
+            h = hashes[stage.name]
             run.out[stage.name] = self._run_stage(stage, h, run, committed.get(stage.name) == h)
+
+        _run_dag(STAGES, reads, step)
         return run.out
 
 

@@ -105,3 +105,26 @@ def test_paths_agree(spark):
     fast = sorted(map(tuple, connected_components(df).collect()))
     loop = sorted(map(tuple, connected_components(df, driver_max_edges=0).collect()))
     assert fast == loop
+
+
+def test_distributed_loop_leaves_session_conf(spark, monkeypatch):
+    """The distributed loop sizes its shuffles with explicit partition
+    counts: it sets no session conf (a stage planned concurrently
+    would see it) and gives the union-find labels."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    edges = [("hub", f"leaf{i:03d}") for i in range(40)]
+    edges += [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(30)]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    want = sorted(map(tuple, connected_components(df).collect()))
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+
+    def no_set(self, key, value):
+        raise AssertionError(f"session conf set: {key}={value}")
+
+    monkeypatch.setattr(RuntimeConfig, "set", no_set)
+    for salt in (1, 4):
+        got = connected_components(df, driver_max_edges=0, salt_buckets=salt, cc_partitions=3)
+        assert sorted(map(tuple, got.collect())) == want
+    monkeypatch.undo()
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
