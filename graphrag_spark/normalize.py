@@ -173,6 +173,12 @@ def surface_norm_map(mentions_raw: DataFrame) -> DataFrame:
     return _norm_flag_cols(mentions_raw.select("name", "type_or_target").distinct())
 
 
+SURFACE_MAP_SCHEMA = (
+    "name string, type_or_target string, norm_name string, norm_type string not null, "
+    "low_name boolean, generic_name boolean"
+)
+
+
 def py_surface_map_rows(pairs) -> list[tuple]:
     """``_norm_flag_cols`` on the driver: (name, type_or_target) pairs
     -> (name, type_or_target, norm_name, norm_type, low_name,
@@ -216,8 +222,7 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
     (scan + shuffle) subtree — AQE otherwise re-runs that subtree once
     per downstream query stage. The surface and canonical maps are
     bounded by the alias vocabulary (O(10^4) rows regardless of corpus
-    size). A frame whose rows a tested Python twin already computed on
-    the driver carries them as ``_graphrag_rows``; then no job runs.
+    size).
 
     Graceful degradation (r3 VERDICT item 5): if the frame exceeds the
     cap — an open-vocabulary extractor at 100x corpus scale — the job
@@ -225,9 +230,7 @@ def _materialize_small(df: DataFrame, context: str) -> DataFrame:
     returned unchanged, flagged so ``maybe_broadcast`` skips the
     broadcast hint and downstream joins fall back to shuffle joins
     (AQE may still auto-broadcast genuinely small subtrees)."""
-    rows = getattr(df, "_graphrag_rows", None)
-    if rows is None:
-        rows = df.limit(_MAX_SURFACE_MAP_ROWS + 1).collect()
+    rows = df.limit(_MAX_SURFACE_MAP_ROWS + 1).collect()
     if len(rows) > _MAX_SURFACE_MAP_ROWS:
         import warnings
 
@@ -285,8 +288,8 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     are by construction a subset of the alias vocabulary — so the
     distinct (surface, messy_type) pair set is read straight off the
     vocabulary payload table instead of a full corpus scan + distinct,
-    and normalized on the driver (``py_surface_map_rows``): the map is
-    a literal frame and no Spark job runs.
+    and normalized on the driver (``py_surface_map_rows``) into a
+    literal frame: no Spark job runs.
     The narrow shape's surfaces MUST come from the vocabulary: a surface
     outside it has no map row here, and ``entities_from_occurrences``
     fails the job on it rather than dropping it.
@@ -297,10 +300,12 @@ def materialize_surface_map(mentions_raw: DataFrame) -> DataFrame:
     if "type_or_target" not in mentions_raw.columns:
         from .extraction import _surface_payload_rows
 
-        rows = [(name, etype) for name, etype, _score, _desc in _surface_payload_rows()]
-        pairs = literal_frame(mentions_raw.sparkSession, rows, "name string, type_or_target string")
-        smap = _norm_flag_cols(pairs)
-        smap._graphrag_rows = py_surface_map_rows(rows)  # type: ignore[attr-defined]
+        smap = literal_frame(
+            mentions_raw.sparkSession,
+            py_surface_map_rows((name, etype) for name, etype, _score, _desc in _surface_payload_rows()),
+            SURFACE_MAP_SCHEMA,
+        )
+        # a LocalRelation collects with no job; the row cap still holds
         return _materialize_small(smap, "surface_map")
     return _materialize_small(surface_norm_map(mentions_raw), "surface_map")
 

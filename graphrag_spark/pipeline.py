@@ -24,10 +24,11 @@ Two runners execute that list:
   ``_lineage`` table (stage, stage_hash, partition_id, doc_id_min,
   doc_id_max, row_count, committed_at) and is read back. Lineage rows
   come from the part files' Parquet footers and the read-back takes
-  its schema from them, so the write is the stage's only Spark job. A
-  rerun reads a stage back instead of building it when its stage hash
-  (params + the hashes of the stages its build reads) is the latest
-  one committed — the kill/resume contract (BASELINE.json north_star;
+  its schema from them, so the write is the stage's only Spark job (a
+  catalog table Spark does not scan as files, such as Iceberg's, is
+  counted by Spark instead). A rerun reads a stage back instead of
+  building it when its stage hash (params + the hashes of the stages
+  its build reads) is the latest one committed — the kill/resume contract (BASELINE.json north_star;
   SURVEY.md §4 item 4).
 
 With the default extractor the runners build the same frames: the
@@ -64,7 +65,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 from . import chunking, extraction, linking, materialize, normalize
@@ -77,20 +78,20 @@ LINEAGE_SCHEMA = (
 
 
 class _PartFile(NamedTuple):
-    """One data file of a committed stage: a local path, or a Hadoop
-    Path with its FileSystem (``fs``) for any other scheme."""
+    """One data file of a committed stage: its path as a string (the
+    sort key), as a Hadoop Path, its length and its FileSystem."""
 
+    name: str
     path: object
     length: int
-    fs: object = None
+    fs: object
 
 
 class _Footer(NamedTuple):
     """What a part file's Parquet footer says: its row count, the
-    ``doc_col`` range from the column statistics and its schema. That
-    is the one Spark recorded, which Spark's schema inference reads
-    too; for another writer (the corpus) the Arrow schema, when every
-    type maps one to one (``_plain``)."""
+    ``doc_col`` range from the column statistics and the schema Spark
+    recorded in it, the one Spark's schema inference reads too (None
+    for a file another writer wrote)."""
 
     rows: int
     doc_min: str | None
@@ -99,42 +100,29 @@ class _Footer(NamedTuple):
 
 
 _SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _plain(t: pa.DataType) -> bool:
-    """Arrow types Spark's Parquet schema inference maps one to one, as
-    ``from_arrow_schema`` does (timestamps, for one, differ)."""
-    if pa.types.is_list(t):
-        return _plain(t.value_type)
-    if pa.types.is_struct(t):
-        return all(_plain(f.type) for f in t)
-    return any(
-        is_type(t) for is_type in (
-            pa.types.is_string, pa.types.is_binary, pa.types.is_boolean, pa.types.is_int8,
-            pa.types.is_int16, pa.types.is_int32, pa.types.is_int64, pa.types.is_float32,
-            pa.types.is_float64, pa.types.is_decimal, pa.types.is_date32,
-        )
-    )
+# one read of a file's last bytes takes its whole footer (under 2 KB
+# for every stage here); bytes cross py4j slowly, so read no more
+_FOOTER_TAIL = 4096
 
 
 def _read_footer(f: _PartFile, doc_col: str | None = None) -> _Footer:
-    """Read ``f``'s footer on the driver, no Spark job: a local file
-    with pyarrow; any other through its Hadoop FileSystem, the trailing
-    length and magic and then the metadata block, parsed by pyarrow
+    """Read ``f``'s footer on the driver, no Spark job, through its
+    Hadoop FileSystem so any scheme works: the file's tail holds the
+    metadata block, its length and the magic; pyarrow parses the block
     behind a stand-in header magic."""
-    if f.fs is None:
-        meta = pq.read_metadata(f.path)
-    else:
-        read = SparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray
-        stream = f.fs.open(f.path)
-        try:
-            stream.seek(f.length - 8)
-            tail = bytes(read(stream, 8))
-            (n,) = struct.unpack("<I", tail[:4])
+    read = SparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray
+    stream = f.fs.open(f.path)
+    try:
+        k = min(f.length, _FOOTER_TAIL)
+        stream.seek(f.length - k)
+        tail = bytes(read(stream, k))
+        (n,) = struct.unpack("<I", tail[-8:-4])
+        if n + 8 > k:
             stream.seek(f.length - 8 - n)
-            meta = pq.read_metadata(pa.BufferReader(b"PAR1" + bytes(read(stream, n)) + tail))
-        finally:
-            stream.close()
+            tail = bytes(read(stream, n + 8))
+    finally:
+        stream.close()
+    meta = pq.read_metadata(pa.BufferReader(b"PAR1" + tail[-8 - n:]))
     lo = hi = None
     cols = [meta.schema.column(j).path for j in range(meta.num_columns)]
     if doc_col in cols:
@@ -149,24 +137,41 @@ def _read_footer(f: _PartFile, doc_col: str | None = None) -> _Footer:
             lo = stats.min if lo is None else min(lo, stats.min)
             hi = stats.max if hi is None else max(hi, stats.max)
     spark_schema = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
-    arrow = meta.schema.to_arrow_schema()
-    if spark_schema:
-        schema = StructType.fromJson(json.loads(spark_schema))
-    elif all(_plain(f.type) for f in arrow):
-        schema = from_arrow_schema(arrow)
-    else:
-        schema = None
+    schema = StructType.fromJson(json.loads(spark_schema)) if spark_schema else None
     return _Footer(meta.num_rows, lo, hi, schema)
 
 
-def _is_local(fs) -> bool:
-    return fs.getScheme() == "file"
+def _walk(fs, root) -> list[_PartFile]:
+    """Every file under the Hadoop Path ``root`` outside hidden
+    (``_``/``.``) entries: the ones a Parquet scan of ``root`` reads.
+    ``listStatus``, not ``listFiles``, whose ``LocatedFileStatus``
+    loads each local file's permissions: about 10 ms a file against
+    1 ms on a 4-core host."""
+    files = []
+    for status in fs.listStatus(root):
+        hpath = status.getPath()
+        name = hpath.toString()
+        if name.rsplit("/", 1)[-1].startswith(("_", ".")):
+            continue
+        if status.isDirectory():
+            files += _walk(fs, hpath)
+        else:
+            files.append(_PartFile(name, hpath, status.getLen(), fs))
+    return files
 
 
-def _local_or_hadoop(fs, hpath, length: int) -> _PartFile:
-    if _is_local(fs):
-        return _PartFile(hpath.toUri().getPath(), length)
-    return _PartFile(hpath, length, fs)
+def _scan_lineage(out: DataFrame, doc_col: str | None) -> list[tuple[int, str | None, str | None]]:
+    """(rows, doc_min, doc_max) per non-empty partition of the
+    read-back ``out``, counted by Spark: the lineage of a stage whose
+    files cannot be listed."""
+    doc = F.col(doc_col) if doc_col in out.columns else F.lit(None).cast("string")
+    rows = (
+        out.groupBy(F.spark_partition_id().alias("p"))
+        .agg(F.count("*").alias("n"), F.min(doc).alias("lo"), F.max(doc).alias("hi"))
+        .orderBy("p")
+        .collect()
+    )
+    return [(r["n"], r["lo"], r["hi"]) for r in rows]
 
 
 @dataclass(frozen=True)
@@ -307,8 +312,7 @@ class KGRun:
         # broadcast the canonical map only while it provably fits —
         # with an open-vocabulary extractor the map grows with distinct
         # entities and a forced broadcast would OOM at corpus scale. A
-        # map committed in this run counts its rows in its part-file
-        # footers: no counting job
+        # map committed in this run was counted by its commit
         n = self.rows.get("cmap")
         if n is None:
             n = self.out["cmap"].count()
@@ -548,41 +552,24 @@ class KGPipeline:
 
     def _part_files(self, path: str, table: str | None) -> list[_PartFile]:
         """The data files of a committed stage, in path order: the files
-        a catalog table's scan reads (``inputFiles``, no job), or every
-        file under ``path`` outside hidden (``_``/``.``) entries, the
-        same ones a Parquet scan of ``path`` reads. Local files are
-        listed by Python: a py4j round trip per file costs about 1 ms."""
-        if table is not None:
-            files = []
-            for f in sorted(self.spark.read.table(table).inputFiles()):
-                hpath, fs = self._fs(f)
-                files.append(_local_or_hadoop(fs, hpath, fs.getFileStatus(hpath).getLen()))
-            return files
-        root, fs = self._fs(path)
-        if _is_local(fs):
-            files = []
-            for d, dirs, names in os.walk(fs.makeQualified(root).toUri().getPath()):
-                dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
-                for n in names:
-                    if not n.startswith(("_", ".")):
-                        files.append(_PartFile(os.path.join(d, n), os.path.getsize(os.path.join(d, n))))
-            return sorted(files)
-        prefix = len(root.toUri().getPath().rstrip("/"))
-        files, it = [], fs.listFiles(root, True)
-        while it.hasNext():
-            status = it.next()
-            hpath = status.getPath()
-            rel = hpath.toUri().getPath()[prefix:].strip("/").split("/")
-            if not any(part.startswith(("_", ".")) for part in rel):
-                files.append(_PartFile(hpath, status.getLen(), fs))
-        return sorted(files, key=lambda f: f.path.toString())
+        a catalog table's scan reads (``inputFiles``, no job; none for a
+        table Spark does not scan as files, such as an Iceberg table),
+        or every file of the Parquet dir ``path`` (``_walk``)."""
+        if table is None:
+            root, fs = self._fs(path)
+            return sorted(_walk(fs, root))
+        files = []
+        for name in self.spark.read.table(table).inputFiles():
+            hpath, fs = self._fs(name)
+            files.append(_PartFile(name, hpath, fs.getFileStatus(hpath).getLen(), fs))
+        return sorted(files)
 
     def _read_stage(self, path: str, table: str | None, footer: _Footer | None = None) -> DataFrame:
         """A committed stage's table. A Parquet dir is read with the
-        schema in its footers (``footer``: one of them, else the first
-        file's), so no schema-inference job runs; partition columns are
-        discovered from the directory names as before. Without a schema
-        Spark can take (no file, an unsupported type) Spark infers it."""
+        schema Spark recorded in its footers (``footer``: one of them,
+        else the first file's), so no schema-inference job runs;
+        partition columns are discovered from the directory names as
+        before. Without a recorded schema Spark infers it."""
         if table is not None:
             return self.spark.read.table(table)
         if footer is None:
@@ -593,23 +580,28 @@ class KGPipeline:
         return self.spark.read.schema(footer.schema).parquet(path)
 
     def _commit(self, stage: Stage, stage_hash: str) -> tuple[DataFrame, int]:
-        """Commit a just-written stage with no Spark job: read its part
-        files' footers on the driver, append its lineage rows and
+        """Commit a just-written stage: append its lineage rows and
         return its read-back and row count.
 
         One lineage row per non-empty part file (``partition_id`` its
         index in path order) holds the file's row count and
-        ``doc_col`` range from the footer; a stage with no rows gets
-        one row_count-0 row, so it still resumes. The rows go to one
-        driver-written Parquet file, written under a hidden name and
-        then renamed, so a killed driver never leaves a partial file
-        the lineage read would see."""
+        ``doc_col`` range, read from its footer on the driver, so the
+        commit runs no Spark job. A catalog table that lists no files
+        (Iceberg) is counted per partition by Spark instead. A stage
+        with no rows gets one row_count-0 row, so it still resumes.
+        The rows go to one driver-written Parquet file, written under a
+        hidden name and then renamed, so a killed driver never leaves a
+        partial file the lineage read would see."""
         path, table = self._path(stage.name), self._table(stage.name)
         footers = [_read_footer(f, stage.doc_col) for f in self._part_files(path, table)]
+        out = self._read_stage(path, table, footers[0] if footers else None)
+        if footers:
+            parts = [(f.rows, f.doc_min, f.doc_max) for f in footers if f.rows > 0]
+        else:
+            parts = _scan_lineage(out, stage.doc_col)
         now = float(time.time())
         rows = [
-            (stage.name, stage_hash, i, f.doc_min, f.doc_max, f.rows, now)
-            for i, f in enumerate(f for f in footers if f.rows > 0)
+            (stage.name, stage_hash, i, lo, hi, n, now) for i, (n, lo, hi) in enumerate(parts)
         ] or [(stage.name, stage_hash, -1, None, None, 0, now)]
         schema = to_arrow_schema(_parse_datatype_string(LINEAGE_SCHEMA))
         cols = [pa.array(c, f.type) for c, f in zip(zip(*rows), schema)]
@@ -618,15 +610,14 @@ class KGPipeline:
         name = f"part-{uuid.uuid4().hex}.parquet"
         final, fs = self._fs(os.path.join(self._lineage_path(), name))
         tmp, _ = self._fs(os.path.join(self._lineage_path(), f".{name}.tmp"))
-        out = fs.create(tmp, False)
+        stream = fs.create(tmp, False)
         try:
-            out.write(buf.getvalue().to_pybytes())
+            stream.write(buf.getvalue().to_pybytes())
         finally:
-            out.close()
+            stream.close()
         if not fs.rename(tmp, final):
             raise OSError(f"could not rename {tmp} to {final}")
-        out = self._read_stage(path, table, footers[0] if footers else None)
-        return out, sum(f.rows for f in footers)
+        return out, sum(n for n, _, _ in parts)
 
     def _run_stage(self, stage: Stage, h: str, run: KGRun, committed: bool) -> DataFrame:
         path, table = self._path(stage.name), self._table(stage.name)
@@ -654,9 +645,8 @@ class KGPipeline:
         """Checkpointed runner: ``STAGES`` as a DAG (``_run_dag``). Each
         stage is read back if committed under its current hash, else
         built, written, committed to lineage and read back."""
-        # the corpus too is read with its footer's schema: no inference job
         run = KGRun(
-            self.spark, self._read_stage(self.corpus_path, None), self.chunk_size,
+            self.spark, self.spark.read.parquet(self.corpus_path), self.chunk_size,
             self.chunk_overlap, self.salt_buckets, self.extractor, in_memory=False,
         )
         committed = self._committed() if resume else {}

@@ -158,59 +158,67 @@ def test_failed_stage_starts_no_dependent(spark, corpus_path, tmp_path, monkeypa
     assert {r["stage"] for r in _lineage(spark, str(tmp_path)).collect()} == {"b"}
 
 
-def test_commit_routes_agree(spark, tmp_path, monkeypatch):
-    """Local files are listed and read by Python; any other scheme goes
-    through the Hadoop FileSystem. On the same written stage both
-    routes give the same lineage rows and read-back."""
-    p = KGPipeline(spark, "unused", str(tmp_path))
-    stage = Stage("tiny", (), None, bucket_col="doc_id", doc_col="doc_id")
-    df = spark.createDataFrame(DOCS, "doc_id string, n int").repartition(3)
-    materialize.write_table(df, p._path("tiny"), buckets=4, bucket_col="doc_id")
-    local, n_local = p._commit(stage, "local")
-    monkeypatch.setattr(pipeline, "_is_local", lambda fs: False)
-    hadoop, n_hadoop = p._commit(stage, "hadoop")
-    assert n_local == n_hadoop == len(DOCS)
-    assert local.schema == hadoop.schema
-    assert sorted(map(tuple, local.collect())) == sorted(map(tuple, hadoop.collect()))
+def test_catalog_table_without_files(spark, tmp_path, monkeypatch):
+    """A catalog table whose scan lists no files (an Iceberg table is
+    not a file relation to Spark) is committed from a Spark count per
+    partition: the lineage rows and the row count the broadcast guard
+    reads are still the stage's."""
+    db = f"kgnofiles{os.getpid()}"
+    spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}")
+    try:
+        p = KGPipeline(spark, "unused", str(tmp_path), iceberg_prefix=db)
+        stage = Stage("tiny", (), None, doc_col="doc_id")
+        df = spark.createDataFrame(DOCS, "doc_id string, n int").repartition(3)
+        materialize.write_table(df, p._path("tiny"), iceberg_table=p._table("tiny"))
+        monkeypatch.setattr(type(spark.read.table(p._table("tiny"))), "inputFiles", lambda self: [])
+        out, n = p._commit(stage, "h0")
+        assert n == len(DOCS)
+        rows = _lineage(spark, str(tmp_path)).collect()
+        assert all(r["row_count"] > 0 for r in rows) and len(rows) > 1
+        assert sum(r["row_count"] for r in rows) == len(DOCS)
+        assert min(r["doc_id_min"] for r in rows) == "doc000"
+        assert max(r["doc_id_max"] for r in rows) == "doc049"
+        assert sorted(map(tuple, out.collect())) == sorted(DOCS)
+    finally:
+        spark.sql(f"DROP DATABASE IF EXISTS {db} CASCADE")
 
-    def rows(h):
-        return sorted(
-            (r["partition_id"], r["doc_id_min"], r["doc_id_max"], r["row_count"])
-            for r in _lineage(spark, str(tmp_path)).filter(F.col("stage_hash") == h).collect()
-        )
 
-    assert rows("local") == rows("hadoop") and len(rows("local")) > 1
-
-
-def test_corpus_read_without_inference(spark, corpus_path, tmp_path):
-    """The corpus is read with its footer's schema: a Spark-written
-    corpus with the schema Spark recorded, a pyarrow-written one with
-    its Arrow schema when every type maps one to one (else Spark infers
-    it). Either way the frame equals a plain read, and no job runs."""
+def test_read_stage_schema(spark, tmp_path):
+    """A Spark-written Parquet dir is read back with the schema Spark
+    recorded in its footers, no job; a dir another writer made has no
+    such schema and Spark infers it. Either way the frame equals a
+    plain read."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    plain_path = tmp_path / "plain"
-    plain_path.mkdir()
-    spans = pa.list_(pa.struct([("kind", pa.string()), ("offset", pa.int32())]))
-    pq.write_table(pa.table({
-        "doc_id": ["d1", "d2"], "spans": [[{"kind": "text", "offset": 0}], []],
-        "score": pa.array([0.5, None], pa.float64()),
-    }, schema=pa.schema([("doc_id", pa.string()), ("spans", spans), ("score", pa.float64())])),
-        plain_path / "part-0.parquet")
-    stamped = tmp_path / "stamped"
-    stamped.mkdir()
-    pq.write_table(pa.table({"t": pa.array([1], pa.timestamp("us"))}), stamped / "part-0.parquet")
+    spark_path = str(tmp_path / "spark")
+    spark.createDataFrame(DOCS, "doc_id string, n int").write.parquet(spark_path)
+    arrow_path = tmp_path / "arrow"
+    arrow_path.mkdir()
+    pq.write_table(pa.table({"doc_id": ["d1", "d2"], "n": [1, 2]}), arrow_path / "part-0.parquet")
 
     p = KGPipeline(spark, "unused", str(tmp_path))
-    for i, (path, inferred) in enumerate(
-        ((corpus_path, False), (str(plain_path), False), (str(stamped), True))
-    ):
-        df, jobs = _jobs_in(spark, f"corpus-read-{i}", lambda: p._read_stage(path, None))
+    for i, (path, inferred) in enumerate(((spark_path, False), (str(arrow_path), True))):
+        df, jobs = _jobs_in(spark, f"stage-read-{i}", lambda: p._read_stage(path, None))
         assert (jobs != []) == inferred, path
         plain = spark.read.parquet(path)
         assert df.schema == plain.schema, path
-        assert sorted(map(str, df.collect())) == sorted(map(str, plain.collect())), path
+        assert sorted(map(tuple, df.collect())) == sorted(map(tuple, plain.collect())), path
+
+
+def test_footer_longer_than_tail(spark, tmp_path, monkeypatch):
+    """A footer longer than the first tail read is read whole by a
+    second read; either way it says what pyarrow reads off the file."""
+    import pyarrow.parquet as pq
+
+    p = KGPipeline(spark, "unused", str(tmp_path))
+    spark.createDataFrame(DOCS, "doc_id string, n int").repartition(3).write.parquet(p._path("t"))
+    files = p._part_files(p._path("t"), None)
+    want = [pipeline._read_footer(f, "doc_id") for f in files]
+    monkeypatch.setattr(pipeline, "_FOOTER_TAIL", 16)
+    assert [pipeline._read_footer(f, "doc_id") for f in files] == want
+    assert [f.rows for f in want] == [pq.read_metadata(f.name[len("file:"):]).num_rows for f in files]
+    assert sum(f.rows for f in want) == len(DOCS) and len(files) == 3
 
 
 def test_shared_intermediate_derived_once(spark):
